@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from audio_quality_checker_spark.session import get_spark
@@ -5,7 +7,10 @@ from audio_quality_checker_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="aqcs-tests", cores=8, shuffle_partitions=8)
+    # one task slot per CPU the run was given: more concurrent Python
+    # workers than cores only share the same memory
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
+    s = get_spark(app_name="aqcs-tests", cores=cores, shuffle_partitions=8)
     yield s
 
 
