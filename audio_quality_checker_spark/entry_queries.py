@@ -1031,8 +1031,11 @@ def q_cosine_pairs(spark, sf):
         for k in range(dim):
             acc += mat[:, k] * mat[:, k]
         norms = np.sqrt(acc)
+        lens = np.array([len(v) if ok else -1 for v, ok in zip(vecs, valid)])
         iu, ju = np.triu_indices(n, 1)
-        both = valid[iu] & valid[ju]
+        # a ragged pair has no dot product (the zip_with fold gave NULL,
+        # DuckDB's list_dot_product rejects it): pair equal lengths only
+        both = valid[iu] & valid[ju] & (lens[iu] == lens[ju])
         iu, ju = iu[both], ju[both]
         # dot: replay fold(0.0, acc + x_k*y_k) in fold order per pair,
         # in bounded chunks so the pair-gathered copies of `mat` stay
@@ -2056,7 +2059,7 @@ FROM documents GROUP BY lang
 
 
 
-SQL_URL_CANONICAL = """
+SQL_URL_CANONICAL = r"""
 WITH raw AS (
   SELECT CASE doc_id % 4
     WHEN 0 THEN 'https://WWW.' || upper('example' || CAST(doc_id % 29 AS VARCHAR) || '.com') || '/p/' || CAST(doc_id % 7 AS VARCHAR) || '?b=2&a=1#section-2'

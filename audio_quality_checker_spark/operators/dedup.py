@@ -21,12 +21,15 @@ O(n * bands) + O(candidate pairs).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql.types import (
     ArrayType,
+    IntegerType,
     LongType,
     StructField,
     StructType,
@@ -36,22 +39,28 @@ from audio_quality_checker_spark.functions.hashing import splitmix64
 
 _SEED_BASE = np.uint64(0x9E3779B97F4A7C15)
 
-#: jaccard_pairs_guarded's class-pair verify ships the class token sets
-#: to every Python worker as a broadcast dictionary when the class
-#: count stays under this bound (~900 MB of worker RSS at the bound:
-#: ~1.8 KB per id-coded frozenset plus dict slots, held once per reused
-#: worker process).  Above it the verify falls back to the JVM
-#: hash-join + array_intersect route — identical values, no broadcast
-#: assumption — mirroring the referential.py DRIVER_BLOOM_MAX_BYTES
-#: refusal pattern: at 10^12-doc scale the class table is corpus-sized
-#: and must never funnel through the driver.
+#: the guarded surface's one class-pair verify (_verify_class_pairs,
+#: both hot routes) ships the class token sets to every Python worker
+#: as a broadcast dictionary when the class count stays under this
+#: bound (~900 MB of worker RSS at the bound: ~1.8 KB per id-coded
+#: token set plus dict slots, held once per reused worker process).
+#: The star route verifies at class level too, so it now broadcasts up
+#: to 500k classes where its former per-doc dictionary stopped at 300k
+#: docs.  Above the bound the verify falls back to the JVM hash-join +
+#: array_intersect route — identical values, no broadcast assumption —
+#: mirroring the referential.py DRIVER_BLOOM_MAX_BYTES refusal pattern:
+#: at 10^12-doc scale the class table is corpus-sized and must never
+#: funnel through the driver.
 _CLS_VERIFY_BROADCAST_MAX = 500_000
 
-#: the star routes' doc-level analog (the dictionary stores one entry
-#: per needs-sig DOC plus one frozenset per DISTINCT token set); bound
-#: lower than the class bound because the doc map is per-doc.  Above
-#: it, the JVM hash-join verify runs — identical values.
-_DOC_VERIFY_BROADCAST_MAX = 300_000
+#: K of the star hot route: each doc is verified against the K smallest
+#: ids of each of its band buckets.  Its miss is one-sided (keep-one
+#: keeps a survivor superset).  At high thresholds clusters stop being
+#: cliques and connectivity runs through CHAINS the star cannot replay:
+#: sf1 @ t=0.8 cap=5000, K=1 left 14.7% more survivors than the pair
+#: surface and K=8 leaves +2.8% (BENCH/SF1.md round-6 A/B); a larger K
+#: buys recall linearly in edge volume.
+_STAR_REPS = 8
 
 
 from audio_quality_checker_spark.functions.partitioning import widen as _widen
@@ -764,7 +773,7 @@ def simhash_pairs_multitable(sigs: DataFrame, id_col: str = "doc_id",
 # ---------------------------------------------------------------------------
 
 
-class _GuardedRoutes:
+class _GuardedRoutes(NamedTuple):
     """The two verified routes of the guarded surface, still lazy, plus
     the caches the builder persisted (callers hand them to
     _finish_pairs after deriving their output).
@@ -776,21 +785,95 @@ class _GuardedRoutes:
     class granularity instead of re-aggregating the expanded doc-pair
     stream."""
 
-    __slots__ = ("exact_pairs", "hot_pairs", "caches", "classes", "vcls")
+    exact_pairs: DataFrame
+    hot_pairs: DataFrame
+    caches: tuple
+    classes: DataFrame | None = None
+    vcls: DataFrame | None = None
 
-    def __init__(self, exact_pairs, hot_pairs, caches,
-                 classes=None, vcls=None):
-        self.exact_pairs = exact_pairs
-        self.hot_pairs = hot_pairs
-        self.caches = caches
-        self.classes = classes
-        self.vcls = vcls
+
+def _verify_class_pairs(cands: DataFrame, classes: DataFrame,
+                        n_classes: int, threshold: float) -> DataFrame:
+    """``cands`` (rid_a, rid_b, ...) class pairs plus their exact token-set
+    ``jaccard``, keeping the pairs >= threshold; any other columns of
+    ``cands`` ride through.  The one verify of both hot routes (jaccard
+    depends only on the two classes' token sets).
+
+    Up to _CLS_VERIFY_BROADCAST_MAX classes, the class token sets go to
+    every Python worker as a broadcast dictionary — tokens id-coded
+    driver-side through a dict on the actual strings, so counts are
+    collision-free and EQUAL to array_intersect's by construction — and
+    each pair costs one vectorized sorted-key intersection instead of
+    an interpreted per-row array_intersect that re-hashes both token
+    arrays (measured 4,000 s of executor time over 94M candidate pairs
+    at sf1 -> ~40 s).  Above the bound the JVM hash-join +
+    array_intersect fallback runs: the same counts, the same double
+    division."""
+    if n_classes <= _CLS_VERIFY_BROADCAST_MAX:
+        vocab: dict[str, int] = {}
+        ridx: dict[int, int] = {}
+        csets: list[np.ndarray] = []
+        for r in classes.select("rid", "tset").collect():
+            idv = np.fromiter(
+                (vocab.setdefault(t, len(vocab)) for t in r["tset"]),
+                np.int64, len(r["tset"]),
+            )
+            idv.sort()
+            ridx[r["rid"]] = len(csets)
+            csets.append(idv)
+        flat, starts, lens = _sorted_id_csr(csets)
+        cbc = cands.sparkSession.sparkContext.broadcast(
+            (ridx, flat, starts, lens, len(vocab) + 1)
+        )
+
+        def _count(batches):
+            # vectorized sorted-key intersection (guide §4.2): the old
+            # per-pair `frozenset &` loop was ~10-20 us/pair x ~15M
+            # distinct candidate pairs at sf1
+            ridx_m, flat_m, st_m, ln_m, vn = cbc.value
+            for pdf in batches:
+                n = len(pdf)
+                # plain-int lists: dict probes on python ints are ~3x
+                # the speed of boxed numpy int64 keys
+                ia = np.fromiter(
+                    (ridx_m[a] for a in pdf["rid_a"].tolist()), np.int64, n
+                )
+                ib = np.fromiter(
+                    (ridx_m[b] for b in pdf["rid_b"].tolist()), np.int64, n
+                )
+                pdf["inter"] = _sorted_pair_inter(
+                    flat_m, st_m, ln_m, ia, ib, vn
+                ).astype(np.int32)
+                pdf["sa"] = ln_m[ia].astype(np.int32)
+                pdf["sb"] = ln_m[ib].astype(np.int32)
+                yield pdf
+
+        counted = cands.mapInPandas(_count, schema=StructType(
+            cands.schema.fields
+            + [StructField(c, IntegerType()) for c in ("inter", "sa", "sb")]
+        ))
+    else:
+        ta = classes.select(F.col("rid").alias("rid_a"),
+                            F.col("tset").alias("ta"))
+        tb = classes.select(F.col("rid").alias("rid_b"),
+                            F.col("tset").alias("tb"))
+        counted = cands.join(ta, "rid_a").join(tb, "rid_b").select(
+            *cands.columns,
+            F.size(F.array_intersect("ta", "tb")).alias("inter"),
+            F.size("ta").alias("sa"),
+            F.size("tb").alias("sb"),
+        )
+    union = F.col("sa") + F.col("sb") - F.col("inter")
+    # empty token sets give union 0: no defined similarity (NULL, dropped)
+    jac = F.when(union > 0, F.col("inter") / union)
+    return counted.select(*cands.columns, jac.alias("jaccard")).where(
+        F.col("jaccard") >= threshold
+    )
 
 
 def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
                     lang_col: str, threshold: float, block_cap: int,
-                    hot_route: str = "pairs",
-                    star_reps: int = 1) -> _GuardedRoutes:
+                    hot_route: str = "pairs") -> _GuardedRoutes:
     """Shared plan builder for the guarded near-dup family.
 
     Blocks on (lang, length-bucket) with ADJACENT-BUCKET PROBING: every
@@ -809,39 +892,56 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     round-5 recall lesson) and are verified with the SAME exact jaccard;
     precision is exact everywhere.
 
+    Route 2 runs over CLASSES, not docs: docs sharing an identical token
+    SET inside the same (lang, bucket) are interchangeable for candidate
+    generation (identical signature => identical band buckets, identical
+    bucket key) AND for verification (jaccard depends only on the sets).
+    Both hot routes share one class table, one signature frame and one
+    class-pair verify (_verify_class_pairs: a broadcast-dictionary
+    mapInPandas up to _CLS_VERIFY_BROADCAST_MAX classes, a JVM
+    array_intersect join above it); they differ only in how candidate
+    class pairs are generated.  On template-heavy corpora (this
+    engine's target) dense buckets collapse 3-12x, which shrinks the
+    candidate join and the verify by up to the square of that.
+
     ``hot_route`` picks route 2's candidate set:
-      "pairs" — ALL band-colliding doc pairs (|bucket delta| <= 1, same
+      "pairs" — ALL band-colliding pairs (|bucket delta| <= 1, same
           lang).  Recall per true pair is the banding collision
           probability (~0.87 at j=0.5, ~0.99 at j=0.7 with 128/32);
-          candidate volume in a dense bucket is O(bucket^2).
-      "star"  — each doc only against the ``star_reps`` SMALLEST-ID
+          candidate volume in a dense bucket is O(bucket^2).  Verified
+          class pairs expand to every (a in A, b in B) doc pair with the
+          class pair's jaccard; within a class jaccard is exactly 1.0
+          and identical signatures always collide, so those pairs are
+          emitted directly (skipping empty token sets, whose jaccard is
+          NULL).  The emitted pair set is IDENTICAL to a per-doc verify.
+      "star"  — each doc only against the _STAR_REPS SMALLEST-ID
           REPRESENTATIVES of each of its band buckets: O(bucket *
-          star_reps) candidates per bucket, O(n * bands * star_reps)
-          total, independent of cluster density.  On mutually-similar
-          clusters (template spam — exactly the case that makes
-          "pairs" quadratic) every member verifies against a rep, so
-          the edges span the same connected components; a doc whose
-          only near-dups are non-representative co-bucketed docs has
-          up to `bands * star_reps` independent rep chances but no
-          exhaustive guarantee.  The miss is ONE-SIDED (an edge is
-          only ever a verified true pair, so star merges are a subset
-          of pair-surface merges: keep-one keeps a SUPERSET — the
-          conservative direction for corpus prep, which must never
-          destroy unique content).  At high thresholds clusters stop
-          being cliques and connectivity runs through CHAINS the star
-          cannot replay (sf1 @ t=0.8 cap=5000: K=1 leaves 14.7% more
-          survivors than the pair surface; see BENCH/SF1.md round-6
-          A/B); raising ``star_reps`` buys recall linearly in edge
-          volume.  Asserted equal on the planted fixtures and the
-          t=0.5 template corpus by tests/bounds gates.
+          _STAR_REPS) candidates per bucket, O(n * bands * _STAR_REPS)
+          total, independent of cluster density.  A bucket's K smallest
+          doc ids are always among its classes' K smallest members, so
+          anchors are picked from one row per class; each anchor row
+          carries its own class, candidates are distinct (anchor class,
+          class, anchor) rows, verified at class level and expanded to
+          (anchor, doc) pairs with doc > anchor only at the end.  On
+          mutually-similar clusters (template spam — exactly the case
+          that makes "pairs" quadratic) every member verifies against
+          a rep, so the edges span the same connected components; a
+          doc whose only near-dups are non-representative co-bucketed
+          docs has up to `bands * _STAR_REPS` independent rep chances
+          but no exhaustive guarantee.  The miss is ONE-SIDED (an edge
+          is only ever a verified true pair, so star merges are a
+          subset of pair-surface merges: keep-one keeps a SUPERSET —
+          the conservative direction for corpus prep, which must never
+          destroy unique content).  Asserted equal on the planted
+          fixtures and the t=0.5 template corpus by tests/bounds gates.
     """
     toks = F.array_distinct(
         F.filter(F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
                  lambda t: t != "")
     )
     # ONE narrow tokenized projection, persisted and reused by the
-    # counts dimension, the exact route (both join sides) and the LSH
-    # verify (both join sides): tokenization is the dominant per-row
+    # counts dimension, the exact route (both join sides) and the hot
+    # route's class collapse: tokenization is the dominant per-row
     # cost and the round-4 shape recomputed it on every consumer.  At
     # corpus scale this spills to disk (MEMORY_AND_DISK) — still far
     # cheaper than four re-tokenizing scans.  Payload text is NOT
@@ -979,60 +1079,44 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     need = base2.where(
         (F.col("blk_n_home") > block_cap) | (F.col("blk_n_up") > block_cap)
     ).select("doc_id", "lang", "len_blk", "toks")
-    if hot_route == "pairs":
-        # CLASS COLLAPSE: docs sharing an identical token SET inside
-        # the same (lang, bucket) are interchangeable for candidate
-        # generation (identical signature => identical band buckets,
-        # identical bucket key) AND for verification (jaccard depends
-        # only on the sets) — so the banding self-join, the distinct
-        # and the exact verify all run over one representative per
-        # class, and doc pairs are expanded afterwards:
-        #   cross-class: every (a in A, b in B) pair of a verified
-        #       class pair carries the class pair's jaccard — the same
-        #       double the per-doc verify computed, since the inputs
-        #       are equal sets.
-        #   within-class: jaccard is exactly 1.0 (inter == union) and
-        #       identical signatures ALWAYS collide, so the old route
-        #       emitted every such pair — emitted directly here
-        #       (skipping empty token sets, whose jaccard is NULL on
-        #       both routes).
-        # On template-heavy corpora (this engine's target) the dense
-        # buckets collapse 3-12x, which shrinks the quadratic
-        # candidate join and the verify by the square of that; the
-        # emitted pair set is IDENTICAL by the argument above
-        # (asserted by the planted-fixture equality tests and the
-        # sf0.1/sf1 output fingerprints).
-        classes = (
-            need.groupBy("lang", "len_blk", F.sort_array("toks").alias("tset"))
-            .agg(
-                F.min("doc_id").alias("rid"),
-                F.sort_array(F.collect_list("doc_id")).alias("ids"),
-                F.count(F.lit(1)).alias("m"),
-            )
+    # CLASS COLLAPSE (see the docstring): one row per (lang, bucket,
+    # token-set) class — its min id `rid` names it, `ids` lists its docs
+    classes = (
+        need.groupBy("lang", "len_blk", F.sort_array("toks").alias("tset"))
+        .agg(
+            F.min("doc_id").alias("rid"),
+            F.sort_array(F.collect_list("doc_id")).alias("ids"),
         )
-        classes.persist(StorageLevel.MEMORY_AND_DISK)
-        n_classes = classes.count()  # eager: four subplans reference it
-        cls_sigs = minhash_signatures(
-            classes.select("rid", "lang", "len_blk",
-                           F.size("tset").alias("tsz"), "tset"),
-            "rid", tokens_col="tset",
-            extra_cols=("lang", "len_blk", "tsz"),
-        )
-        # compact per-class signatures cached; the 32x banded explode is
-        # re-derived lazily per join side (cheap codegen vs caching the
-        # exploded frame)
-        cls_sigs.persist(StorageLevel.MEMORY_AND_DISK)
-        cls_sigs.count()
-        sigs = _banded_sigs(
-            cls_sigs, "rid", 32, 128, extra_cols=("lang", "len_blk", "tsz")
-        )
-        ca, cb = sigs.alias("a"), sigs.alias("b")
+    )
+    classes.persist(StorageLevel.MEMORY_AND_DISK)
+    n_classes = classes.count()  # eager: several subplans reference it
+    # `top` (the class's largest doc id) lets the star route drop
+    # candidate classes whose expansion could never pass doc > anchor
+    sig_cols = ("lang", "len_blk", "tsz", "top")
+    cls_sigs = minhash_signatures(
+        classes.select("rid", "lang", "len_blk",
+                       F.size("tset").alias("tsz"),
+                       F.element_at("ids", -1).alias("top"), "tset"),
+        "rid", tokens_col="tset", extra_cols=sig_cols,
+    )
+    # compact per-class signatures cached; the 32x banded explode is
+    # re-derived lazily per join side (cheap codegen vs caching the
+    # exploded frame)
+    cls_sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    cls_sigs.count()
+    sigs = _banded_sigs(cls_sigs, "rid", 32, 128, extra_cols=sig_cols)
+
+    def size_ok(sa: Column, sb: Column) -> Column:
         # size prefilter: jaccard >= t forces min(|A|,|B|) >= t*max
         # (inter <= min, union >= max, so jac <= min/max) — a NECESSARY
         # condition, so dropping violators cannot change the verified
-        # output; it only spares the distinct's shuffle the collisions
-        # that could never pass.  The 1e-9 margin covers double
-        # rounding on both sides of the comparison.
+        # output; it only spares the distinct's shuffle and the verify
+        # the collisions that could never pass.  The 1e-9 margin covers
+        # double rounding on both sides of the comparison.
+        return F.least(sa, sb) >= (threshold - 1e-9) * F.greatest(sa, sb)
+
+    if hot_route == "pairs":
+        ca, cb = sigs.alias("a"), sigs.alias("b")
         cands = (
             ca.join(
                 cb,
@@ -1040,8 +1124,7 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
                 & (F.col("a.band_hash") == F.col("b.band_hash"))
                 & (F.col("a.lang") == F.col("b.lang"))
                 & (F.abs(F.col("a.len_blk") - F.col("b.len_blk")) <= 1)
-                & (F.least("a.tsz", "b.tsz")
-                   >= (threshold - 1e-9) * F.greatest("a.tsz", "b.tsz"))
+                & size_ok(F.col("a.tsz"), F.col("b.tsz"))
                 & (F.col("a.rid") < F.col("b.rid")),
             )
             .select(
@@ -1050,94 +1133,7 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
             )
             .distinct()
         )
-        if n_classes <= _CLS_VERIFY_BROADCAST_MAX:
-            # broadcast-dictionary verify: the class table is small
-            # enough to ship to every Python worker as id-coded frozen
-            # sets (tokens dictionary-encoded driver-side — a dict on
-            # the actual strings, so counts are collision-free and
-            # EQUAL to array_intersect's by construction).  Each
-            # candidate pair costs one C-speed set intersection
-            # instead of an interpreted per-row array_intersect that
-            # re-hashes both token arrays (measured 4,000 s of
-            # executor time over 94M candidate pairs at sf1 -> ~40 s).
-            rows = classes.select("rid", "tset").collect()
-            vocab: dict[str, int] = {}
-            ridx: dict[int, int] = {}
-            csets: list[np.ndarray] = []
-            for r in rows:
-                idv = np.fromiter(
-                    (vocab.setdefault(t, len(vocab)) for t in r["tset"]),
-                    np.int64, len(r["tset"]),
-                )
-                idv.sort()
-                ridx[r["rid"]] = len(csets)
-                csets.append(idv)
-            flat, starts, lens = _sorted_id_csr(csets)
-            cbc = df.sparkSession.sparkContext.broadcast(
-                (ridx, flat, starts, lens, len(vocab) + 1)
-            )
-
-            def _verify(batches):
-                # vectorized sorted-key intersection (guide §4.2): the
-                # old per-pair `frozenset &` loop was ~10-20 us/pair x
-                # ~15M distinct candidate pairs at sf1 — the dominant
-                # cost of the verify stage.  Counts are identical by
-                # construction (exact set intersection on the same
-                # id-coding).
-                ridx_m, flat_m, st_m, ln_m, vn = cbc.value
-                for pdf in batches:
-                    n = len(pdf)
-                    # plain-int lists: dict probes on python ints are
-                    # ~3x the speed of boxed numpy int64 keys
-                    ia = np.fromiter(
-                        (ridx_m[a] for a in pdf["rid_a"].tolist()),
-                        np.int64, n,
-                    )
-                    ib = np.fromiter(
-                        (ridx_m[b] for b in pdf["rid_b"].tolist()),
-                        np.int64, n,
-                    )
-                    inter_n = _sorted_pair_inter(
-                        flat_m, st_m, ln_m, ia, ib, vn
-                    )
-                    yield pd.DataFrame(
-                        {"rid_a": pdf["rid_a"], "rid_b": pdf["rid_b"],
-                         "inter": inter_n.astype(np.int32),
-                         "sa": ln_m[ia].astype(np.int32),
-                         "sb": ln_m[ib].astype(np.int32)}
-                    )
-
-            counted = cands.mapInPandas(
-                _verify,
-                schema="rid_a long, rid_b long, inter int, sa int, sb int",
-            )
-            vu = F.col("sa") + F.col("sb") - F.col("inter")
-            vcls = (
-                counted.select(
-                    "rid_a", "rid_b",
-                    F.when(vu > 0, F.col("inter") / vu).alias("jaccard"),
-                )
-                .where(F.col("jaccard") >= threshold)
-            )
-        else:
-            # JVM hash-join verify — the any-scale fallback (identical
-            # values: same intersect counts, same double division)
-            cta = classes.select(
-                F.col("rid").alias("rid_a"), F.col("tset").alias("ta")
-            )
-            ctb = classes.select(
-                F.col("rid").alias("rid_b"), F.col("tset").alias("tb")
-            )
-            vinter = F.size(F.array_intersect("ta", "tb"))
-            vunion = F.size("ta") + F.size("tb") - vinter
-            vcls = (
-                cands.join(cta, "rid_a").join(ctb, "rid_b")
-                .select(
-                    "rid_a", "rid_b",
-                    F.when(vunion > 0, vinter / vunion).alias("jaccard"),
-                )
-                .where(F.col("jaccard") >= threshold)
-            )
+        vcls = _verify_class_pairs(cands, classes, n_classes, threshold)
         vcls.persist(StorageLevel.MEMORY_AND_DISK)
         cross = (
             vcls
@@ -1160,7 +1156,7 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
             )
         )
         within = (
-            classes.where((F.col("m") > 1) & (F.size("tset") > 0))
+            classes.where((F.size("ids") > 1) & (F.size("tset") > 0))
             .select(F.explode("ids").alias("_a"), "ids")
             .select("_a", F.explode("ids").alias("_b"))
             .where(F.col("_a") < F.col("_b"))
@@ -1175,189 +1171,52 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
                               classes=classes, vcls=vcls)
     if hot_route != "star":  # pragma: no cover - caller bug
         raise ValueError(f"unknown hot_route {hot_route!r}")
-    # K-anchor star routes, CLASS-COLLAPSED (the same equivalence
-    # argument as the "pairs" route): bucket membership, the
-    # |delta bucket| <= 1 predicate and the verified jaccard are all
-    # invariants of the (lang, bucket, token-set) class — identical
-    # token sets give identical signatures, hence identical band
-    # buckets — and a bucket's K smallest doc ids are always contained
-    # in the union of its classes' K smallest members.  So anchor
-    # selection, the candidate join and the distinct all run over ONE
-    # row per class (dense template buckets collapse 2.5-3.5x in rows,
-    # more in join output), and candidates expand to (anchor, doc)
-    # pairs at the very end — duplicate-free by construction (each doc
-    # belongs to exactly one class), so the former per-doc-pair
-    # distinct disappears.  doc_id > rep_id keeps each candidate once
-    # with id_a < id_b and drops self-pairs, exactly as before.  The
-    # anchor rank window is partitioned per bucket and rank <= K plans
-    # as a WindowGroupLimit (map-side prune to K per bucket before the
-    # exchange).
-    scls = (
-        need.groupBy("lang", "len_blk", F.sort_array("toks").alias("tset"))
-        .agg(
-            F.min("doc_id").alias("rid"),
-            F.sort_array(F.collect_list("doc_id")).alias("ids"),
-        )
-    )
-    scls.persist(StorageLevel.MEMORY_AND_DISK)
-    s_sigs = minhash_signatures(
-        scls.select("rid", "lang", "len_blk", "tset"),
-        "rid", tokens_col="tset", extra_cols=("lang", "len_blk"),
-    )
-    # compact per-class signatures cached; the banded explode is
-    # re-derived lazily per consumer (see the pairs route).  Eagerly
-    # materialized in the verify section below, overlapped with the
-    # dictionary collect.
-    s_sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    csigs = _banded_sigs(
-        s_sigs, "rid", 32, 128, extra_cols=("lang", "len_blk")
-    )
+    # anchors: the K smallest doc ids per band bucket, each carrying its
+    # own class.  The rank window is partitioned per bucket and rank <= K
+    # plans as a WindowGroupLimit (map-side prune to K per bucket before
+    # the exchange).
     from pyspark.sql import Window as W
 
-    k_reps = max(1, star_reps)
-    wr = W.partitionBy("lang", "band_idx", "band_hash").orderBy("cand_id")
-    rep_cands = (
-        csigs.join(scls.select("rid", "ids"), "rid")
+    wr = W.partitionBy("lang", "band_idx", "band_hash").orderBy("rep_id")
+    reps = (
+        sigs.join(classes.select("rid", "ids"), "rid")
         .select(
             "lang", "band_idx", "band_hash",
             F.col("len_blk").alias("rep_blk"),
-            F.explode(F.slice("ids", 1, k_reps)).alias("cand_id"),
+            F.col("tsz").alias("rep_tsz"),
+            F.col("rid").alias("rep_rid"),
+            F.explode(F.slice("ids", 1, _STAR_REPS)).alias("rep_id"),
         )
+        .withColumn("__rk", F.row_number().over(wr))
+        .where(F.col("__rk") <= _STAR_REPS)
     )
-    reps = (
-        rep_cands.withColumn("__rk", F.row_number().over(wr))
-        .where(F.col("__rk") <= k_reps)
+    # (anchor class, class, anchor) candidates — an anchor belongs to
+    # one class, so these are the distinct (anchor, class) pairs
+    cands = (
+        sigs.join(reps, ["lang", "band_idx", "band_hash"])
+        .where(
+            (F.abs(F.col("len_blk") - F.col("rep_blk")) <= 1)
+            & (F.col("top") > F.col("rep_id"))
+            & size_ok(F.col("tsz"), F.col("rep_tsz"))
+        )
         .select(
-            "lang", "band_idx", "band_hash",
-            F.col("cand_id").alias("rep_id"), "rep_blk",
+            F.col("rep_rid").alias("rid_a"),
+            F.col("rid").alias("rid_b"),
+            "rep_id",
         )
-    )
-    cand_cls = (
-        csigs.join(reps, ["lang", "band_idx", "band_hash"])
-        .where(F.abs(F.col("len_blk") - F.col("rep_blk")) <= 1)
-        .select("rep_id", "rid")
         .distinct()
     )
-    cands = (
-        cand_cls.join(scls.select("rid", "ids"), "rid")
-        .select("rep_id", F.explode("ids").alias("doc_id"))
-        .where(F.col("doc_id") > F.col("rep_id"))
-        .select(
-            F.col("rep_id").alias("id_a"),
-            F.col("doc_id").alias("id_b"),
-        )
+    # expand at the very end: duplicate-free by construction (each doc
+    # belongs to exactly one class); doc > anchor keeps each pair once
+    # with id_a < id_b and drops self-pairs
+    hot_pairs = (
+        _verify_class_pairs(cands, classes, n_classes, threshold)
+        .join(classes.select(F.col("rid").alias("rid_b"), "ids"), "rid_b")
+        .select(F.col("rep_id").alias("id_a"),
+                F.explode("ids").alias("id_b"), "jaccard")
+        .where(F.col("id_b") > F.col("id_a"))
     )
-    # star-candidate verify.  Fast path: ship the needs-sig docs' token
-    # sets to the Python workers as a broadcast dictionary (id-coded,
-    # deduplicated by SET so dense template clusters share storage and
-    # a per-batch memo collapses repeated (set, set) intersections) —
-    # candidates only ever pair needs-sig docs, and the counts equal
-    # array_intersect's by construction.  The limit() IS the size
-    # refusal (contamination_report pattern): over the bound, the JVM
-    # hash-join verify below runs instead — identical values, no
-    # broadcast assumption.
-    # the dictionary collect and the signature materialization above
-    # only share `base` (already cached): overlap them from two driver
-    # threads so the star path pays one round of latency, not two
-    # (guide §2.6 — concurrent independent jobs back-fill the tail)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _collect_vrows():
-        return (
-            base2.where(
-                (F.col("blk_n_home") > block_cap)
-                | (F.col("blk_n_up") > block_cap)
-            )
-            .select("doc_id", F.sort_array("toks").alias("ts"))
-            .limit(_DOC_VERIFY_BROADCAST_MAX + 1)
-            .collect()
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut = pool.submit(_collect_vrows)
-        s_sigs.count()  # also fills the scls cache it derives from
-        vrows = fut.result()
-    if len(vrows) <= _DOC_VERIFY_BROADCAST_MAX:
-        vocab: dict[str, int] = {}
-        setmap: dict[tuple, int] = {}
-        sets: list[np.ndarray] = []
-        docmap: dict[int, int] = {}
-        for r in vrows:
-            key = tuple(r["ts"])
-            sid = setmap.get(key)
-            if sid is None:
-                ids = np.fromiter(
-                    (vocab.setdefault(t, len(vocab)) for t in r["ts"]),
-                    np.int64, len(r["ts"]),
-                )
-                ids.sort()
-                sid = len(sets)
-                sets.append(ids)
-                setmap[key] = sid
-            docmap[r["doc_id"]] = sid
-        flat, starts, lens = _sorted_id_csr(sets)
-        n_sets = max(1, len(sets))
-        dbc = df.sparkSession.sparkContext.broadcast(
-            (docmap, flat, starts, lens, len(vocab) + 1, n_sets)
-        )
-
-        def _star_verify(batches):
-            # vectorized sorted-key intersection (guide §4.2) at
-            # DISTINCT-(set,set) granularity: dense template clusters
-            # repeat the same set pair across many (anchor, doc)
-            # candidates, so the batch is reduced with np.unique first
-            # (the vectorized form of the old per-pair dict memo) and
-            # the per-unique-pair counts are scattered back.
-            dmap, flat_m, st_m, ln_m, vn, ns = dbc.value
-            for pdf in batches:
-                n = len(pdf)
-                sa_id = np.fromiter(
-                    (dmap[a] for a in pdf["id_a"].tolist()), np.int64, n
-                )
-                sb_id = np.fromiter(
-                    (dmap[b] for b in pdf["id_b"].tolist()), np.int64, n
-                )
-                uniq, inv = np.unique(
-                    sa_id * ns + sb_id, return_inverse=True
-                )
-                inter_u = _sorted_pair_inter(
-                    flat_m, st_m, ln_m, uniq // ns, uniq % ns, vn
-                )
-                yield pd.DataFrame(
-                    {"id_a": pdf["id_a"], "id_b": pdf["id_b"],
-                     "inter": inter_u[inv].astype(np.int32),
-                     "sa": ln_m[sa_id].astype(np.int32),
-                     "sb": ln_m[sb_id].astype(np.int32)}
-                )
-
-        counted = cands.mapInPandas(
-            _star_verify,
-            schema="id_a long, id_b long, inter int, sa int, sb int",
-        )
-        vu = F.col("sa") + F.col("sb") - F.col("inter")
-        hot_pairs = (
-            counted.select(
-                "id_a", "id_b",
-                F.when(vu > 0, F.col("inter") / vu).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= threshold)
-        )
-    else:
-        ta = base.select(F.col("doc_id").alias("id_a"),
-                         F.col("toks").alias("ta"))
-        tb = base.select(F.col("doc_id").alias("id_b"),
-                         F.col("toks").alias("tb"))
-        inter2 = F.size(F.array_intersect("ta", "tb"))
-        union2 = F.size("ta") + F.size("tb") - inter2
-        hot_pairs = (
-            cands.join(ta, "id_a").join(tb, "id_b")
-            .select(
-                "id_a", "id_b",
-                F.when(union2 > 0, inter2 / union2).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= threshold)
-        )
-    return _GuardedRoutes(exact_pairs, hot_pairs, (s_sigs, scls, base))
+    return _GuardedRoutes(exact_pairs, hot_pairs, (cls_sigs, classes, base))
 
 
 def jaccard_pairs_guarded(df: DataFrame, id_col: str = "doc_id",
@@ -1441,89 +1300,77 @@ def jaccard_pairs_guarded(df: DataFrame, id_col: str = "doc_id",
 def jaccard_edges_guarded(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", lang_col: str = "lang",
                           threshold: float = 0.5,
-                          block_cap: int = 5_000,
-                          exact_route: str = "certificate",
-                          star_reps: int = 8) -> DataFrame:
+                          block_cap: int = 5_000) -> DataFrame:
     """(id_a, id_b, jaccard): O(n)-output verified EDGES spanning the
     guarded surface's duplicate clusters — the keep-one/components feed
     at crawl scale, where the full pair list grows O(cluster^2) on
     template-heavy crawls (round-5 verdict: 11.56M pairs from 50k docs
     at sf1, while a survivor set needs O(n) information).
 
-    Hot blocks: star edges against each band bucket's min-id rep
-    (O(n*bands); see _guarded_routes).  Small blocks (``exact_route``):
-      "certificate" — the exact all-pairs compare runs unchanged
-          (compute bounded by cap^2 per block), then each bucket's
-          verified match rows are reduced IN PLACE to a sparse
-          connectivity certificate: union-find per (lang, bucket) group
-          emits one star edge (component_min, member) per member —
-          <= block-1 edges per bucket.  The union of per-bucket
-          certificates has EXACTLY the same connected components as the
-          union of per-bucket match graphs (a path through any bucket's
-          graph is replayed through that bucket's certificate), so
-          keep-one survivors are identical to the full-pair surface's
-          wherever the exact route applies — no chain caveat.  The
-          groupBy reuses the exact join's (lang, blk) partitioning, so
-          the O(block^2) match rows are reduced where they were
-          produced, never re-shuffled or materialized; per-group state
-          is bounded by the same cap^2 that bounds the compare.
-          Edge jaccard = the member's STRONGEST verified similarity in
-          the bucket (a real verified value >= threshold; the
-          certificate witnesses connectivity, not a specific pair).
-      "pairs" — full within-block pairs (exact parity with
-          jaccard_pairs_guarded's route 1, output bounded by cap/doc).
+    Hot blocks: star edges against each band bucket's _STAR_REPS
+    min-id reps (O(n*bands); see _guarded_routes).  Small blocks: the
+    exact all-pairs compare runs unchanged (compute bounded by cap^2
+    per block), then each bucket's verified match rows are reduced IN
+    PLACE to a sparse connectivity certificate: union-find per (lang,
+    bucket) group emits one star edge (component_min, member) per
+    member — <= block-1 edges per bucket.  The union of per-bucket
+    certificates has EXACTLY the same connected components as the union
+    of per-bucket match graphs (a path through any bucket's graph is
+    replayed through that bucket's certificate), so keep-one survivors
+    are identical to the full-pair surface's wherever the exact route
+    applies — no chain caveat.  The groupBy reuses the exact join's
+    (lang, blk) partitioning, so the O(block^2) match rows are reduced
+    where they were produced, never re-shuffled or materialized;
+    per-group state is bounded by the same cap^2 that bounds the
+    compare.  Edge jaccard = the member's STRONGEST verified similarity
+    in the bucket (a real verified value >= threshold; the certificate
+    witnesses connectivity, not a specific pair).
 
     Edges from the two routes are unioned and per-edge deduplicated.
     Returned persisted/materialized; callers may unpersist."""
     routes = _guarded_routes(df, id_col, text_col, lang_col, threshold,
-                             block_cap, hot_route="star",
-                             star_reps=star_reps)
-    exact = routes.exact_pairs
-    if exact_route == "certificate":
-        def _cert(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = np.unique(
-                np.concatenate([pdf["id_a"].to_numpy(),
-                                pdf["id_b"].to_numpy()])
-            )  # sorted, so index order == id order and root 0 is min-id
-            idx = pd.Series(np.arange(len(ids)), index=ids)
-            parent = np.arange(len(ids))
+                             block_cap, hot_route="star")
 
-            def find(i: int) -> int:
-                while parent[i] != i:
-                    parent[i] = parent[parent[i]]
-                    i = parent[i]
-                return i
+    def _cert(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = np.unique(
+            np.concatenate([pdf["id_a"].to_numpy(),
+                            pdf["id_b"].to_numpy()])
+        )  # sorted, so index order == id order and root 0 is min-id
+        idx = pd.Series(np.arange(len(ids)), index=ids)
+        parent = np.arange(len(ids))
 
-            ia = idx[pdf["id_a"].to_numpy()].to_numpy()
-            ib = idx[pdf["id_b"].to_numpy()].to_numpy()
-            for x, y in zip(ia, ib):
-                rx, ry = find(x), find(y)
-                if rx != ry:
-                    # union by smaller INDEX = smaller id, so every
-                    # root is its component's minimum id
-                    if rx < ry:
-                        parent[ry] = rx
-                    else:
-                        parent[rx] = ry
-            roots = np.array([find(i) for i in range(len(ids))])
-            best = pd.concat([
-                pdf[["id_a", "jaccard"]].rename(columns={"id_a": "d"}),
-                pdf[["id_b", "jaccard"]].rename(columns={"id_b": "d"}),
-            ]).groupby("d")["jaccard"].max()
-            members = np.flatnonzero(roots != np.arange(len(ids)))
-            return pd.DataFrame({
-                "id_a": ids[roots[members]],
-                "id_b": ids[members],
-                "jaccard": best.loc[ids[members]].to_numpy(),
-            })
+        def find(i: int) -> int:
+            while parent[i] != i:
+                parent[i] = parent[parent[i]]
+                i = parent[i]
+            return i
 
-        exact = routes.exact_pairs.groupBy("lang", "blk").applyInPandas(
-            _cert, schema="id_a long, id_b long, jaccard double"
-        )
-    elif exact_route == "pairs":
-        exact = exact.select("id_a", "id_b", "jaccard")
-    else:  # pragma: no cover - caller bug
-        raise ValueError(f"unknown exact_route {exact_route!r}")
+        ia = idx[pdf["id_a"].to_numpy()].to_numpy()
+        ib = idx[pdf["id_b"].to_numpy()].to_numpy()
+        for x, y in zip(ia, ib):
+            rx, ry = find(x), find(y)
+            if rx != ry:
+                # union by smaller INDEX = smaller id, so every
+                # root is its component's minimum id
+                if rx < ry:
+                    parent[ry] = rx
+                else:
+                    parent[rx] = ry
+        roots = np.array([find(i) for i in range(len(ids))])
+        best = pd.concat([
+            pdf[["id_a", "jaccard"]].rename(columns={"id_a": "d"}),
+            pdf[["id_b", "jaccard"]].rename(columns={"id_b": "d"}),
+        ]).groupby("d")["jaccard"].max()
+        members = np.flatnonzero(roots != np.arange(len(ids)))
+        return pd.DataFrame({
+            "id_a": ids[roots[members]],
+            "id_b": ids[members],
+            "jaccard": best.loc[ids[members]].to_numpy(),
+        })
+
+    exact = routes.exact_pairs.groupBy("lang", "blk").applyInPandas(
+        _cert, schema="id_a long, id_b long, jaccard double"
+    )
     out = (
         exact.unionByName(routes.hot_pairs)
         .groupBy("id_a", "id_b")
@@ -1535,8 +1382,7 @@ def jaccard_edges_guarded(df: DataFrame, id_col: str = "doc_id",
 def near_dup_members_guarded(df: DataFrame, id_col: str = "doc_id",
                              text_col: str = "text", lang_col: str = "lang",
                              threshold: float = 0.5,
-                             block_cap: int = 5_000,
-                             star_reps: int = 8) -> DataFrame:
+                             block_cap: int = 5_000) -> DataFrame:
     """(id_col): the distinct documents that have at least one verified
     near-duplicate — the MEMBERSHIP surface the verdict gate consumes.
 
@@ -1548,8 +1394,7 @@ def near_dup_members_guarded(df: DataFrame, id_col: str = "doc_id",
     Hot-block membership comes from verified star edges (recall caveat
     in _guarded_routes)."""
     routes = _guarded_routes(df, id_col, text_col, lang_col, threshold,
-                             block_cap, hot_route="star",
-                             star_reps=star_reps)
+                             block_cap, hot_route="star")
     both = routes.exact_pairs.select("id_a", "id_b", "jaccard").unionByName(
         routes.hot_pairs
     )

@@ -664,17 +664,19 @@ def test_membership_and_survivors_match_pair_surface_exact_route(spark):
     edges.unpersist()
 
 
-def test_star_hot_route_membership_recall(spark):
+@pytest.mark.parametrize("verify_max", [None, 0], ids=["default", "0"])
+def test_star_hot_route_membership_recall(spark, monkeypatch, verify_max):
     """Hot blocks (forced via cap=10): star-to-rep membership must
     recover nearly all pair-derived members on a reordered-token
     template block — the banding floor applies per (doc, rep) chance
-    across 32 bands, so on mutually-similar blocks recall is ~1."""
+    across 32 bands, so on mutually-similar blocks recall is ~1.
+
+    verify_max=0 forces the class-pair verify onto its JVM
+    array_intersect fallback: pairs, members and edges must equal the
+    broadcast-dictionary path's exactly."""
     import random
 
-    from audio_quality_checker_spark.operators.dedup import (
-        jaccard_pairs_guarded,
-        near_dup_members_guarded,
-    )
+    from audio_quality_checker_spark.operators import dedup
 
     rng = random.Random(5)
     vocab = [f"w{i}" for i in range(60)]
@@ -682,20 +684,26 @@ def test_star_hot_route_membership_recall(spark):
         (i, "en", " ".join(rng.sample(vocab, 45))) for i in range(60)
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    pairs = jaccard_pairs_guarded(df, threshold=0.5, block_cap=10)
-    pair_members = {
-        r["doc_id"]
-        for r in pairs.select(F.col("id_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-        .collect()
-    }
-    members = near_dup_members_guarded(df, threshold=0.5, block_cap=10)
-    got = {r["doc_id"] for r in members.collect()}
+
+    def surfaces():
+        out = []
+        for fn in (dedup.jaccard_pairs_guarded,
+                   dedup.near_dup_members_guarded,
+                   dedup.jaccard_edges_guarded):
+            res = fn(df, threshold=0.5, block_cap=10)
+            out.append({tuple(r) for r in res.collect()})
+            res.unpersist()
+        return out
+
+    pairs, members, edges = surfaces()
+    if verify_max is not None:
+        monkeypatch.setattr(dedup, "_CLS_VERIFY_BROADCAST_MAX", verify_max)
+        assert surfaces() == [pairs, members, edges]
+    pair_members = {a for a, _, _ in pairs} | {b for _, b, _ in pairs}
+    got = {d for (d,) in members}
     assert not (got - pair_members), "star must never invent members"
     assert len(got) >= 0.9 * len(pair_members), (len(got), len(pair_members))
-    pairs.unpersist()
-    members.unpersist()
+    assert edges and len(edges) < len(pairs)
 
 
 def test_sorted_pair_inter_matches_bruteforce():
