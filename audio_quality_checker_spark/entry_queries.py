@@ -257,12 +257,14 @@ def q_quantiles(spark, sf):
 
     Every scan is map-side partial-aggregated; nothing shuffles row
     data, nothing sorts more than one bucket, no per-group reducer
-    funnel exists.  If a degenerate distribution packs > 2M rows into
-    one target bucket, the implementation falls back to the
-    (value, frequency) Percentile aggregate — same values, no wrong
-    answers on adversarial data.
+    funnel exists.  If the target buckets together exceed the driver
+    budget (session.fits_driver_budget), the implementation falls back
+    to the (value, frequency) Percentile aggregate — same values, no
+    wrong answers on adversarial data.
     """
     import math
+
+    from audio_quality_checker_spark.session import fits_driver_budget
 
     li = load(spark, sf, "lineitem")
     r1 = (
@@ -361,13 +363,13 @@ def q_quantiles(spark, sf):
                     acc = 0
                     for bk, c in buckets:
                         if acc + c >= rank1:
-                            if c > 2_000_000:
-                                fallback = True
                             need_rows.setdefault((flag, bk), []).append(
                                 (which, side, rank1 - acc)
                             )
                             break
                         acc += c
+        est = 40 * sum(dict(hmap[f])[bk] for f, bk in need_rows)  # ~40 B/row
+        fallback = not fits_driver_budget(spark, "quantiles.buckets", est)
         if not fallback and need_rows:
             sel = spark.createDataFrame(
                 [(f, bk) for (f, bk) in need_rows],
@@ -407,7 +409,7 @@ def q_quantiles(spark, sf):
                         lp, hp,
                     )
     if fallback:
-        # adversarial bucket: exact (value, frequency) aggregate route
+        # buckets over the budget: exact (value, frequency) aggregate route
         pre = li.groupBy("l_returnflag", "l_extendedprice").agg(
             F.count(F.lit(1)).alias("cnt")
         )

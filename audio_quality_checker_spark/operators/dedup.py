@@ -36,22 +36,9 @@ from pyspark.sql.types import (
 )
 
 from audio_quality_checker_spark.functions.hashing import splitmix64
+from audio_quality_checker_spark.session import fits_driver_budget
 
 _SEED_BASE = np.uint64(0x9E3779B97F4A7C15)
-
-#: the guarded surface's one class-pair verify (_verify_class_pairs,
-#: both hot routes) ships the class token sets to every Python worker
-#: as a broadcast dictionary when the class count stays under this
-#: bound (~900 MB of worker RSS at the bound: ~1.8 KB per id-coded
-#: token set plus dict slots, held once per reused worker process).
-#: The star route verifies at class level too, so it now broadcasts up
-#: to 500k classes where its former per-doc dictionary stopped at 300k
-#: docs.  Above the bound the verify falls back to the JVM hash-join +
-#: array_intersect route — identical values, no broadcast assumption —
-#: mirroring the referential.py DRIVER_BLOOM_MAX_BYTES refusal pattern:
-#: at 10^12-doc scale the class table is corpus-sized and must never
-#: funnel through the driver.
-_CLS_VERIFY_BROADCAST_MAX = 500_000
 
 #: K of the star hot route: each doc is verified against the K smallest
 #: ids of each of its band buckets.  Its miss is one-sided (keep-one
@@ -793,23 +780,22 @@ class _GuardedRoutes(NamedTuple):
 
 
 def _verify_class_pairs(cands: DataFrame, classes: DataFrame,
-                        n_classes: int, threshold: float) -> DataFrame:
+                        cls_bytes: int, threshold: float) -> DataFrame:
     """``cands`` (rid_a, rid_b, ...) class pairs plus their exact token-set
     ``jaccard``, keeping the pairs >= threshold; any other columns of
     ``cands`` ride through.  The one verify of both hot routes (jaccard
     depends only on the two classes' token sets).
 
-    Up to _CLS_VERIFY_BROADCAST_MAX classes, the class token sets go to
-    every Python worker as a broadcast dictionary — tokens id-coded
+    When the class token sets (``cls_bytes``) fit the driver budget, they
+    go to every Python worker as a broadcast dictionary — tokens id-coded
     driver-side through a dict on the actual strings, so counts are
     collision-free and EQUAL to array_intersect's by construction — and
     each pair costs one vectorized sorted-key intersection instead of
     an interpreted per-row array_intersect that re-hashes both token
     arrays (measured 4,000 s of executor time over 94M candidate pairs
-    at sf1 -> ~40 s).  Above the bound the JVM hash-join +
-    array_intersect fallback runs: the same counts, the same double
-    division."""
-    if n_classes <= _CLS_VERIFY_BROADCAST_MAX:
+    at sf1 -> ~40 s).  Otherwise the JVM hash-join + array_intersect
+    fallback runs: the same counts, the same double division."""
+    if fits_driver_budget(cands.sparkSession, "dedup.verify", cls_bytes):
         vocab: dict[str, int] = {}
         ridx: dict[int, int] = {}
         csets: list[np.ndarray] = []
@@ -898,8 +884,8 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     bucket key) AND for verification (jaccard depends only on the sets).
     Both hot routes share one class table, one signature frame and one
     class-pair verify (_verify_class_pairs: a broadcast-dictionary
-    mapInPandas up to _CLS_VERIFY_BROADCAST_MAX classes, a JVM
-    array_intersect join above it); they differ only in how candidate
+    mapInPandas when the class token sets fit the driver budget, a JVM
+    array_intersect join otherwise); they differ only in how candidate
     class pairs are generated.  On template-heavy corpora (this
     engine's target) dense buckets collapse 3-12x, which shrinks the
     candidate join and the verify by up to the square of that.
@@ -1089,7 +1075,11 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
         )
     )
     classes.persist(StorageLevel.MEMORY_AND_DISK)
-    n_classes = classes.count()  # eager: several subplans reference it
+    # eager (several subplans reference it); sizes the verify broadcast:
+    # token strings, 8-byte offset and 8-byte id each, ~32 B per class
+    cls_bytes = classes.agg(F.sum(
+        F.length(F.concat_ws("", "tset")) + 16 * F.size("tset") + 32
+    )).collect()[0][0] or 0
     # `top` (the class's largest doc id) lets the star route drop
     # candidate classes whose expansion could never pass doc > anchor
     sig_cols = ("lang", "len_blk", "tsz", "top")
@@ -1133,7 +1123,7 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
             )
             .distinct()
         )
-        vcls = _verify_class_pairs(cands, classes, n_classes, threshold)
+        vcls = _verify_class_pairs(cands, classes, cls_bytes, threshold)
         vcls.persist(StorageLevel.MEMORY_AND_DISK)
         cross = (
             vcls
@@ -1210,7 +1200,7 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     # belongs to exactly one class); doc > anchor keeps each pair once
     # with id_a < id_b and drops self-pairs
     hot_pairs = (
-        _verify_class_pairs(cands, classes, n_classes, threshold)
+        _verify_class_pairs(cands, classes, cls_bytes, threshold)
         .join(classes.select(F.col("rid").alias("rid_b"), "ids"), "rid_b")
         .select(F.col("rep_id").alias("id_a"),
                 F.explode("ids").alias("id_b"), "jaccard")

@@ -9,7 +9,7 @@ Three operators, each chosen for a plan that survives 10^12 rows:
       Dodge et al. 2021 n-gram-overlap check): flag documents sharing
       any word n-gram with an evaluation set.  The eval side is
       distinct-collapsed and BROADCAST (eval suites are KB-to-MB scale
-      by nature; a loud refusal guards the assumption), and the corpus
+      by nature; the driver budget guards the assumption), and the corpus
       job is MAP-ONLY — vectorized per-batch gram building + a
       broadcast-set probe, zero exchanges end to end.
 
@@ -49,14 +49,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-#: contamination_report refuses to broadcast an eval gram set larger
-#: than this — at that point it is not an "eval suite" any more and the
-#: caller should run the dedup surfaces (operators/dedup.py) instead.
-#: The bound is per-worker memory math, not taste: the gram set ships
-#: to every Python worker as a pickled set (~120 B per 4-word gram
-#: incl. hash-slot overhead), so 2M grams ≈ 240 MB per worker — the
-#: largest footprint a 4-8 GB executor slot absorbs without eviction.
-MAX_EVAL_GRAMS = 2_000_000
+from audio_quality_checker_spark import session
+
+#: bytes of one broadcast eval gram beyond its characters (str + set slot)
+_GRAM_OVERHEAD_BYTES = 72
 
 _NORM_RE = re.compile(r"[^a-z0-9]+")
 
@@ -133,7 +129,6 @@ def contamination_report(
     id_col: str = "doc_id",
     text_col: str = "text",
     eval_text_col: str = "text",
-    max_eval_grams: int = MAX_EVAL_GRAMS,
 ) -> DataFrame:
     """Per-document n-gram overlap with an evaluation set:
     ``(id, n_grams, n_hits, contamination_frac)`` for every document
@@ -141,9 +136,9 @@ def contamination_report(
     training-data pipeline quarantines before the mix.
 
     Scale shape: the eval gram set is distinct-collapsed and collected
-    through a ``limit(max_eval_grams + 1)`` — the limit IS the refusal
-    guard (driver memory stays bounded even on a violating input; the
-    referential.py exact-keys precedent: a silent giant broadcast is a
+    through a ``limit(n + 1)``, ``n`` the most grams the driver budget
+    could hold, and refused past that budget (driver memory stays
+    bounded even on a violating input: a silent giant broadcast is a
     driver OOM, not a slow query) — then shipped to the Python workers
     as a broadcast set.  The corpus job is then MAP-ONLY: each Arrow
     batch tokenizes vectorized (``_py_word_ngrams`` — Catalyst HOF
@@ -162,24 +157,24 @@ def contamination_report(
             dg = _py_word_ngrams(pdf[eval_text_col], n)
             yield pd.DataFrame({"gram": dg["g"].unique()})
 
+    spark = docs.sparkSession
+    budget = session.driver_budget_bytes(spark)
     ev_rows = (
         eval_df.where(F.col(eval_text_col).isNotNull())
         .select(eval_text_col)
         .mapInPandas(_ev_grams, schema="gram string")
         .distinct()
-        .limit(max_eval_grams + 1)
+        .limit(budget // _GRAM_OVERHEAD_BYTES + 1)
         .collect()
     )
-    if len(ev_rows) > max_eval_grams:
+    est = sum(len(r["gram"]) + _GRAM_OVERHEAD_BYTES for r in ev_rows)
+    if not session.fits_driver_budget(spark, "contamination.eval_grams", est):
         raise ValueError(
-            f"eval set yields > max_eval_grams={max_eval_grams} distinct "
-            f"{n}-grams; that is corpus-scale, not eval-scale — use "
+            f"eval set's distinct {n}-grams exceed the driver budget of "
+            f"{budget} bytes; that is corpus-scale, not eval-scale — use "
             "operators/dedup.py surfaces instead of a broadcast"
         )
-    spark = docs.sparkSession
-    ev_bc = spark.sparkContext.broadcast(
-        frozenset(r["gram"] for r in ev_rows)
-    )
+    ev_bc = spark.sparkContext.broadcast(frozenset(r["gram"] for r in ev_rows))
     out_schema = StructType(
         [
             StructField(id_col, docs.schema[id_col].dataType, True),

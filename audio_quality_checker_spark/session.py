@@ -8,6 +8,7 @@ here so the same module configures ``spark-submit`` jobs.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -54,6 +55,24 @@ def default_driver_memory() -> str:
         return DRIVER_MEM_FALLBACK
     mb = int(avail_kb * DRIVER_MEM_HOST_SHARE) // 1024
     return DRIVER_MEM_FALLBACK if mb >= DRIVER_MEM_CAP_MB else f"{mb}m"
+
+
+def driver_budget_bytes(spark: SparkSession) -> int:
+    """Bytes one driver-side collect or broadcast may hold: half the live
+    JVM max heap, split across the task slots (each may hold a copy of a
+    broadcast in its Python worker).  Follows the heap's own setting."""
+    sc = spark.sparkContext
+    heap = sc._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    return heap // (2 * max(1, sc.defaultParallelism))
+
+
+def fits_driver_budget(spark: SparkSession, site: str, est_bytes: int) -> bool:
+    """The one driver-side size guard; logs the sizes that decided it."""
+    budget = driver_budget_bytes(spark)
+    logging.getLogger(__name__).info(
+        "%s: %d bytes %s driver budget %d bytes", site, est_bytes,
+        "within" if est_bytes <= budget else "over", budget)
+    return est_bytes <= budget
 
 
 def get_spark(

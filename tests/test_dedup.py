@@ -664,18 +664,19 @@ def test_membership_and_survivors_match_pair_surface_exact_route(spark):
     edges.unpersist()
 
 
-@pytest.mark.parametrize("verify_max", [None, 0], ids=["default", "0"])
-def test_star_hot_route_membership_recall(spark, monkeypatch, verify_max):
+@pytest.mark.parametrize("budget", [None, 0], ids=["default", "0"])
+def test_star_hot_route_membership_recall(spark, monkeypatch, budget):
     """Hot blocks (forced via cap=10): star-to-rep membership must
     recover nearly all pair-derived members on a reordered-token
     template block — the banding floor applies per (doc, rep) chance
     across 32 bands, so on mutually-similar blocks recall is ~1.
 
-    verify_max=0 forces the class-pair verify onto its JVM
+    A zero driver budget forces the class-pair verify onto its JVM
     array_intersect fallback: pairs, members and edges must equal the
     broadcast-dictionary path's exactly."""
     import random
 
+    from audio_quality_checker_spark import session
     from audio_quality_checker_spark.operators import dedup
 
     rng = random.Random(5)
@@ -696,8 +697,9 @@ def test_star_hot_route_membership_recall(spark, monkeypatch, verify_max):
         return out
 
     pairs, members, edges = surfaces()
-    if verify_max is not None:
-        monkeypatch.setattr(dedup, "_CLS_VERIFY_BROADCAST_MAX", verify_max)
+    if budget is not None:
+        monkeypatch.setattr(session, "driver_budget_bytes",
+                            lambda spark: budget)
         assert surfaces() == [pairs, members, edges]
     pair_members = {a for a, _, _ in pairs} | {b for _, b, _ in pairs}
     got = {d for (d,) in members}

@@ -48,3 +48,33 @@ def test_cosine_pairs_skips_ragged_vectors(spark, tmp_path):
     got = {(r["vec_a"], r["vec_b"], r["cosine"])
            for r in q_cosine_pairs(spark, str(tmp_path)).collect()}
     assert got == {(1, 2, 1.0)}
+
+
+def test_quantiles_fallback_matches_bucket_route(spark, tmp_path,
+                                                 monkeypatch):
+    """With no driver budget the target buckets are not collected and the
+    (value, frequency) percentile route answers instead: same rows."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from audio_quality_checker_spark import session
+    from audio_quality_checker_spark.entry_queries import q_quantiles
+
+    rng = random.Random(3)
+    rows = [("A", float(rng.randint(1, 50)), round(rng.uniform(1, 1e4), 2))
+            for _ in range(400)]
+    rows += [("N", 5.0, 7.0)] * 20              # constant price
+    rows += [("R", 1.0, None), ("R", 2.0, None)]  # all-null price
+    flag, qty, price = zip(*rows)
+    pq.write_table(
+        pa.table({"l_returnflag": pa.array(flag, pa.string()),
+                  "l_quantity": pa.array(qty, pa.float64()),
+                  "l_extendedprice": pa.array(price, pa.float64())}),
+        tmp_path / "lineitem.parquet",
+    )
+    want = sorted(q_quantiles(spark, str(tmp_path)).collect())
+    monkeypatch.setattr(session, "driver_budget_bytes", lambda spark: 0)
+    assert sorted(q_quantiles(spark, str(tmp_path)).collect()) == want
+    assert len(want) == 3

@@ -4,7 +4,7 @@ decontamination, stratified sampling, token-budget mix.
 The load-bearing gates:
   - contamination_report: planted-overlap recall/precision is EXACT
     (every doc carrying an eval n-gram flags, nothing else does), and
-    the broadcast refusal fires above the gram cap.
+    the broadcast refusal fires past the driver budget.
   - stratified_sample: per-stratum quotas exact, selection identical
     across partitionings (content-addressed order), rank contiguous.
   - budget_mix: equivalent to the single-partition window cumsum on
@@ -122,10 +122,16 @@ def test_py_ngrams_matches_catalyst_spec(spark):
         assert got_sets.get(r["i"], set()) == want, r["i"]
 
 
-def test_contamination_broadcast_refusal(spark):
+def test_contamination_broadcast_refusal(spark, monkeypatch):
+    from audio_quality_checker_spark import session
+
     docs = _docs(spark, [(0, "en", "a b c d e f g h i j")])
-    with pytest.raises(ValueError, match="max_eval_grams"):
-        contamination_report(docs, docs, n=4, max_eval_grams=2)
+    assert contamination_report(docs, docs, n=4).count() == 1
+    # 7 distinct 4-grams; a 100-byte budget holds one (7 chars + 72 B),
+    # so the collect stops at two and refuses
+    monkeypatch.setattr(session, "driver_budget_bytes", lambda spark: 100)
+    with pytest.raises(ValueError, match="driver budget of 100 bytes"):
+        contamination_report(docs, docs, n=4)
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,8 @@
 """Bloom filter: no false negatives ever, FPP within bound, merge
 equivalence, and the Spark probe agrees with the left_anti exact oracle."""
 
+import logging
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -58,38 +60,38 @@ def test_spark_probe_matches_exact_oracle(spark):
     assert len(v) == 1 and v[0]["violation_type"] == "ReferentialViolation"
 
 
-def test_bloom_build_refuses_unbroadcastable_filter(spark):
-    """A dimension whose Bloom would exceed the broadcastable bound must
+def test_bloom_build_refuses_unbroadcastable_filter(spark, monkeypatch):
+    """A dimension whose Bloom would not fit the driver budget must
     refuse loudly with guidance, not OOM the driver (round-5 verdict:
     documented-bound-plus-refusal, the bounds_simhash precedent)."""
     import pytest as _pytest
 
-    from audio_quality_checker_spark.operators import referential as R
+    from audio_quality_checker_spark import session
 
     dim = spark.createDataFrame(
         [(f"host{i}",) for i in range(64)], "host string"
     )
-    old = R.DRIVER_BLOOM_MAX_BYTES
-    try:
-        R.DRIVER_BLOOM_MAX_BYTES = 8  # absurdly small: force the refusal
-        with _pytest.raises(ValueError, match="left_anti"):
-            R.build_bloom(dim, "host")
-    finally:
-        R.DRIVER_BLOOM_MAX_BYTES = old
+    monkeypatch.setattr(session, "driver_budget_bytes", lambda spark: 8)
+    with _pytest.raises(ValueError,
+                        match="driver budget of 8 bytes.*left_anti"):
+        build_bloom(dim, "host")
 
 
-def test_bloom_distributed_build_tree_merges(spark):
-    """The >cap path (forced via the key threshold) must produce a
-    filter equivalent to the driver build: same members, no false
-    negatives."""
-    from audio_quality_checker_spark.operators import referential as R
+def test_bloom_distributed_build_tree_merges(spark, monkeypatch, caplog):
+    """A budget that holds the filter but not the keys forces the
+    distributed build: it must produce the driver build's filter, bit
+    for bit."""
+    from audio_quality_checker_spark import session
 
     hosts = [f"h{i}.example.com" for i in range(500)]
     dim = spark.createDataFrame([(h,) for h in hosts], "host string")
-    old = R.DRIVER_BUILD_MAX_KEYS
-    try:
-        R.DRIVER_BUILD_MAX_KEYS = 10  # force the distributed path
-        bf = R.build_bloom(dim, "host")
-    finally:
-        R.DRIVER_BUILD_MAX_KEYS = old
+    driver_bf = build_bloom(dim, "host")
+    budget = BloomFilter.sized_for(len(hosts)).m_bits // 8
+    monkeypatch.setattr(session, "driver_budget_bytes",
+                        lambda spark: budget)
+    with caplog.at_level(logging.INFO, logger=session.__name__):
+        bf = build_bloom(dim, "host")
+    assert "bloom.keys" in caplog.text and "over driver budget" in caplog.text
+    assert (bf.m_bits, bf.n_hashes) == (driver_bf.m_bits, driver_bf.n_hashes)
+    assert np.array_equal(bf.bits, driver_bf.bits)
     assert all(bf.contains_many(hosts))

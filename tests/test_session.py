@@ -1,4 +1,8 @@
-"""The driver-heap default of ``session.get_spark``, checked without a JVM."""
+"""The driver-heap default of ``session.get_spark`` and the driver byte
+budget derived from the live heap, checked without a JVM."""
+
+import logging
+from types import SimpleNamespace
 
 import pytest
 
@@ -49,3 +53,32 @@ def test_default_falls_back_when_host_unreadable(fake_meminfo, content):
     if content is not None:
         fake_meminfo.write_text(content)
     assert session.default_driver_memory() == "48g"
+
+
+def _fake_spark(max_heap: int, parallelism: int):
+    """Just the surface driver_budget_bytes reads: the JVM Runtime's max
+    heap and the context's default parallelism."""
+    runtime = SimpleNamespace(maxMemory=lambda: max_heap)
+    jvm = SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(
+        Runtime=SimpleNamespace(getRuntime=lambda: runtime))))
+    return SimpleNamespace(sparkContext=SimpleNamespace(
+        _jvm=jvm, defaultParallelism=parallelism))
+
+
+def test_budget_is_half_heap_per_task_slot():
+    # 6 GiB heap, 4 slots: 6 GiB / 8 = 768 MiB
+    assert session.driver_budget_bytes(_fake_spark(6 << 30, 4)) == 768 << 20
+    assert session.driver_budget_bytes(_fake_spark(1000, 3)) == 166
+
+
+def test_fits_driver_budget_at_the_bound(caplog):
+    spark = _fake_spark(8000, 4)  # budget 1000 bytes
+    with caplog.at_level(logging.INFO, logger=session.__name__):
+        assert session.fits_driver_budget(spark, "site.a", 1000)
+    assert len(caplog.records) == 1
+    assert "site.a" in caplog.text and "1000" in caplog.text
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger=session.__name__):
+        assert not session.fits_driver_budget(spark, "site.b", 1001)
+    [rec] = caplog.records
+    assert "site.b: 1001 bytes over driver budget 1000 bytes" in rec.message
