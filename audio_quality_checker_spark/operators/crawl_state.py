@@ -107,9 +107,9 @@ def dedup_against(state_sigs: DataFrame, new_sigs: DataFrame,
         .where(F.col("est_jaccard") >= threshold)
     )
     # materialize the pair output, then release the tagged-union cache:
-    # stream_ingest_dedup calls this once per micro-batch, so a leaked
-    # persist here accumulates one cached frame per batch for the
-    # stream's lifetime.  The returned frame is persisted; callers that
+    # a long-lived session calls this once per ingested crawl, so a
+    # leaked persist here accumulates one cached frame per call for the
+    # session's lifetime.  The returned frame is persisted; callers that
     # are done with it may `.unpersist()` it.
     out.persist()
     out.count()

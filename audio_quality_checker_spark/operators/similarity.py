@@ -219,30 +219,18 @@ def binary_signatures(df: DataFrame, dim: int, n_bits: int = 192,
 
 def bq_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5,
             n_bits: int = 192, cand_frac: float = 0.08,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            n_corpus: int | None = None,
-            corpus_sketches: DataFrame | None = None) -> DataFrame:
+            id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k via binary quantization: hamming prefilter over
     packed sign sketches (pure Catalyst popcount), exact cosine on the
     surviving top-``cand_frac`` per query.  Same output schema as
     brute_force_topk; deterministic (seeded planes, id tie-breaks).
-
-    ``n_corpus`` lets callers that know the corpus size skip the count
-    action used to convert cand_frac into a per-query candidate count.
-    ``corpus_sketches`` (an (id, sketch) frame from a persisted index —
-    see operators/similarity_index.py) skips re-sketching the corpus:
-    at 10^12 vectors the sketch table is built once and stored, and a
-    query batch only sketches ITSELF."""
-    if n_corpus is None:
-        n_corpus = corpus.count()
-    m = max(k, int(np.ceil(cand_frac * n_corpus)))
+    One count of the corpus turns cand_frac into a per-query candidate
+    count."""
+    m = max(k, int(np.ceil(cand_frac * corpus.count())))
     qs = binary_signatures(queries, dim, n_bits, id_col, vec_col).select(
         F.col(id_col).alias("query_id"), F.col("sketch").alias("qsk")
     )
-    cs = (
-        corpus_sketches if corpus_sketches is not None
-        else binary_signatures(corpus, dim, n_bits, id_col, vec_col)
-    ).select(
+    cs = binary_signatures(corpus, dim, n_bits, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("sketch").alias("csk")
     )
     hamming = F.aggregate(
@@ -472,25 +460,16 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray, n_probe: int = 1,
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5,
              n_lists: int = 16, n_probe: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             centroids: np.ndarray | None = None,
-             corpus_assign: DataFrame | None = None) -> DataFrame:
+             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k via IVF: corpus vectors live in ONE inverted list
     each; a query probes its `n_probe` nearest lists and scores only those
     lists' members exactly.  Work is O(|Q| * n_probe * |corpus|/n_lists)
     expected — the shuffle key is list_id, so each list is a co-located
     join group and no all-pairs stage exists.  Same output schema as
     brute_force_topk; recall vs the oracle asserted in tests."""
-    cents = centroids if centroids is not None else train_centroids(
-        corpus, dim, n_lists, vec_col=vec_col, id_col=id_col
-    )
-    c_assign = (
-        corpus_assign.select(
-            F.col(id_col).alias("neighbor_id"), "list_id"
-        )
-        if corpus_assign is not None
-        else ivf_assign(corpus, cents, 1, id_col, vec_col, "neighbor_id")
-    )
+    cents = train_centroids(corpus, dim, n_lists, vec_col=vec_col,
+                            id_col=id_col)
+    c_assign = ivf_assign(corpus, cents, 1, id_col, vec_col, "neighbor_id")
     q_assign = ivf_assign(queries, cents, n_probe, id_col, vec_col, "query_id")
     cand = (
         q_assign.join(c_assign, "list_id")

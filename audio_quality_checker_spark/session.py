@@ -58,11 +58,22 @@ def default_driver_memory() -> str:
 
 
 def driver_budget_bytes(spark: SparkSession) -> int:
-    """Bytes one driver-side collect or broadcast may hold: half the live
-    JVM max heap, split across the task slots (each may hold a copy of a
-    broadcast in its Python worker).  Follows the heap's own setting."""
+    """Bytes one driver-side collect or broadcast may hold: half the
+    driver JVM's ``-Xmx``, split across the task slots (each may hold a
+    copy of a broadcast in its Python worker).
+
+    ``-Xmx`` is the heap the launcher started the JVM with, from
+    ``--driver-memory`` or ``SPARK_DRIVER_MEM``.  It is the same on every
+    run, so one input takes one route; the live ``Runtime.maxMemory()``
+    moves as ParallelGC resizes the heap.  ``spark.driver.memory`` in the
+    context's conf is no substitute: under spark-submit it holds the
+    value ``get_spark`` asked for, not the heap the JVM already has."""
     sc = spark.sparkContext
-    heap = sc._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    jvm = sc._jvm
+    args = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean() \
+        .getInputArguments()
+    xmx = [a[len("-Xmx"):] for a in args if a.startswith("-Xmx")][-1]
+    heap = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(xmx)
     return heap // (2 * max(1, sc.defaultParallelism))
 
 

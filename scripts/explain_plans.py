@@ -181,7 +181,7 @@ def main() -> int:
             fmt(
                 bq_topk(
                     vecs.where("vec_id < 2"), vecs, dim=8, k=2,
-                    n_bits=192, cand_frac=0.5, n_corpus=8,
+                    n_bits=192, cand_frac=0.5,
                 )
             ),
         )

@@ -1,18 +1,8 @@
-"""Report-only regression tier + diagnostic threshold suggestions
-(regression_test.rs:141-144 / diagnostic_test.rs:520-526 analogs)."""
+"""Report-only regression tier (regression_test.rs:141-144 analog)."""
 
 import json
 
 from audio_quality_checker_spark.config import CheckSuite
-from audio_quality_checker_spark.operators.stats import (
-    derive_row_features,
-    partition_stats,
-)
-from audio_quality_checker_spark.plans.diagnostics import (
-    diagnostic_metrics,
-    suggest_thresholds,
-    suite_with_suggestions,
-)
 from audio_quality_checker_spark.plans.regression_report import (
     append_trend,
     augment_expectations,
@@ -86,40 +76,3 @@ def test_quality_report_opt_in_tier_pins_recall(spark, golden):
         partition_day("PaddedText")
     ]
     assert "RepetitionAnomaly" in rep_day["got_types"]
-
-
-def test_diagnostic_metrics_long_form(spark, golden):
-    stats = partition_stats(
-        derive_row_features(golden["pages"]).drop("html", "text"), exact=True
-    )
-    m = diagnostic_metrics(stats)
-    got = {(r["p_day"], r["measure"]) for r in m.collect()}
-    assert (partition_day("NullStorm"), "null_rate_text") in got
-    assert (partition_day("DupUrl"), "dup_rate") in got
-
-
-def test_threshold_suggestions_separate_controls_from_defects(spark, golden):
-    stats = partition_stats(
-        derive_row_features(golden["pages"]).drop("html", "text"), exact=True
-    )
-    clean_day = partition_day("Control_Clean")
-    labels = {
-        "null_rate_text": {clean_day: False, partition_day("NullStorm"): True},
-        "dup_rate": {clean_day: False, partition_day("DupUrl"): True},
-        "extraction_error_rate": {
-            clean_day: False, partition_day("MalformedHtml"): True,
-        },
-    }
-    sugg = {s["measure"]: s for s in suggest_thresholds(stats, labels)}
-    for m in labels:
-        assert sugg[m]["separable"], f"{m}: control/defect not separable"
-        assert sugg[m]["max_clean"] < sugg[m]["suggested_threshold"] \
-            < sugg[m]["min_defect"]
-    # the shipped defaults sit inside the suggested separation bands
-    assert sugg["dup_rate"]["current_inside_band"]
-    assert sugg["null_rate_text"]["current_inside_band"]
-    # and the auto-tuned suite applies them
-    tuned = suite_with_suggestions(list(sugg.values()), CheckSuite())
-    assert tuned.max_dup_rate == round(
-        sugg["dup_rate"]["suggested_threshold"], 6
-    )

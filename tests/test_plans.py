@@ -184,8 +184,7 @@ def test_bq_topk_candidate_cut_is_two_phase(spark):
     rng = np.random.default_rng(7)
     rows = [(i, rng.standard_normal(16).tolist()) for i in range(64)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    plan = fmt(bq_topk(vecs.limit(4), vecs, dim=16, k=3, n_bits=64,
-                       n_corpus=64))
+    plan = fmt(bq_topk(vecs.limit(4), vecs, dim=16, k=3, n_bits=64))
     # the candidate stage: a partial WindowGroupLimit must appear below
     # the (single) hashpartitioning(query_id) Exchange of the hamming
     # window — node ids in formatted explain increase towards the leaves

@@ -1,5 +1,6 @@
 """The driver-heap default of ``session.get_spark`` and the driver byte
-budget derived from the live heap, checked without a JVM."""
+budget derived from the heap the JVM was launched with, checked without a
+JVM except in ``test_budget_reads_the_launch_heap``."""
 
 import logging
 from types import SimpleNamespace
@@ -55,20 +56,34 @@ def test_default_falls_back_when_host_unreadable(fake_meminfo, content):
     assert session.default_driver_memory() == "48g"
 
 
-def _fake_spark(max_heap: int, parallelism: int):
-    """Just the surface driver_budget_bytes reads: the JVM Runtime's max
-    heap and the context's default parallelism."""
-    runtime = SimpleNamespace(maxMemory=lambda: max_heap)
-    jvm = SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(
-        Runtime=SimpleNamespace(getRuntime=lambda: runtime))))
+def _fake_spark(heap: int, parallelism: int):
+    """Just the surface driver_budget_bytes reads: the JVM's launch
+    arguments (``-Xmx`` in bytes) and the context's default parallelism."""
+    bean = SimpleNamespace(getInputArguments=lambda: [
+        "-XX:+UseParallelGC", "-Xms1", f"-Xmx{heap}"])
+    java = SimpleNamespace(lang=SimpleNamespace(management=SimpleNamespace(
+        ManagementFactory=SimpleNamespace(getRuntimeMXBean=lambda: bean))))
+    utils = SimpleNamespace(JavaUtils=SimpleNamespace(byteStringAsBytes=int))
+    org = SimpleNamespace(apache=SimpleNamespace(spark=SimpleNamespace(
+        network=SimpleNamespace(util=utils))))
     return SimpleNamespace(sparkContext=SimpleNamespace(
-        _jvm=jvm, defaultParallelism=parallelism))
+        _jvm=SimpleNamespace(java=java, org=org),
+        defaultParallelism=parallelism))
 
 
 def test_budget_is_half_heap_per_task_slot():
     # 6 GiB heap, 4 slots: 6 GiB / 8 = 768 MiB
     assert session.driver_budget_bytes(_fake_spark(6 << 30, 4)) == 768 << 20
     assert session.driver_budget_bytes(_fake_spark(1000, 3)) == 166
+
+
+def test_budget_reads_the_launch_heap(spark):
+    """The session the tests run in was launched by ``get_spark``, so its
+    ``-Xmx`` is the ``spark.driver.memory`` it asked for."""
+    sc = spark.sparkContext
+    heap = sc._jsc.sc().conf().getSizeAsBytes("spark.driver.memory", "1g")
+    assert session.driver_budget_bytes(spark) == \
+        heap // (2 * sc.defaultParallelism)
 
 
 def test_fits_driver_budget_at_the_bound(caplog):

@@ -203,148 +203,3 @@ def test_embedding_near_dups_planted_recall_and_precision(spark, vectors):
     for (a, b), c in got.items():
         assert exact.get((a, b), exact.get((b, a))) == c
         assert c >= 0.9
-
-
-def test_persistent_index_matches_direct_operators(spark, vectors, tmp_path):
-    """Build-once/query-many: index-backed top-k must be BIT-IDENTICAL
-    to the direct operators (same seeds, same plans), for both the BQ
-    and IVF methods, across a save/load cycle."""
-    from audio_quality_checker_spark.operators.similarity import (
-        bq_topk,
-        ivf_topk,
-    )
-    from audio_quality_checker_spark.operators.similarity_index import (
-        build_index,
-        load_index,
-    )
-
-    df, _ = vectors
-    queries = df.where(F.col("vec_id") >= 500)
-    idx = build_index(df, str(tmp_path / "ann"), dim=DIM, n_lists=8)
-    idx2 = load_index(spark, str(tmp_path / "ann"))
-    assert (idx2.dim, idx2.n_bits, idx2.n_lists, idx2.n_vectors) == (
-        DIM, 192, 8, 310,
-    )
-
-    from audio_quality_checker_spark.operators.similarity_index import (
-        index_topk,
-    )
-
-    direct_bq = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in bq_topk(queries, df, DIM, k=3).collect()
-    }
-    indexed_bq = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in index_topk(queries, df, idx2, k=3, method="bq").collect()
-    }
-    assert indexed_bq == direct_bq and len(indexed_bq) == 30
-
-    direct_ivf = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in ivf_topk(queries, df, DIM, k=3, n_lists=8,
-                          centroids=idx2.centroids).collect()
-    }
-    indexed_ivf = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in index_topk(queries, df, idx2, k=3, method="ivf").collect()
-    }
-    assert indexed_ivf == direct_ivf
-
-
-def test_index_append_matches_rebuild(spark, vectors, tmp_path):
-    """Incremental append: queries over (base + appended crawl) must be
-    bit-identical to a full rebuild on the union for the BQ method, and
-    to the direct IVF operator given the same (frozen) centroids.
-    Re-appending the same crawl_id must be a no-op by value."""
-    from audio_quality_checker_spark.operators.similarity import ivf_topk
-    from audio_quality_checker_spark.operators.similarity_index import (
-        append_to_index,
-        build_index,
-        index_topk,
-        load_index,
-    )
-
-    df, _ = vectors
-    base = df.where(F.col("vec_id") < 250)
-    crawl = df.where(F.col("vec_id") >= 250)
-    queries = df.where(F.col("vec_id") >= 500)
-
-    idx = build_index(base, str(tmp_path / "inc"), dim=DIM, n_lists=8)
-    idx = append_to_index(crawl, idx, "crawl-1")
-    assert idx.n_vectors == 310
-
-    full = build_index(df, str(tmp_path / "full"), dim=DIM, n_lists=8)
-    res_inc = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in index_topk(queries, df, idx, k=3, method="bq").collect()
-    }
-    res_full = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in index_topk(queries, df, full, k=3, method="bq").collect()
-    }
-    assert res_inc == res_full and len(res_inc) == 30
-
-    # IVF with the FROZEN base centroids: identical to the direct
-    # operator given those centroids (the documented staleness dial —
-    # a retrained rebuild may differ)
-    res_ivf = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in index_topk(queries, df, idx, k=3, method="ivf").collect()
-    }
-    direct = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in ivf_topk(queries, df, DIM, k=3, n_lists=8,
-                          centroids=idx.centroids).collect()
-    }
-    assert res_ivf == direct
-
-    # resume-safety: re-append overwrites with identical content
-    before = sorted(
-        (r["vec_id"], r["crawl_id"], tuple(r["sketch"]))
-        for r in idx.sketches.collect()
-    )
-    idx2 = append_to_index(crawl, idx, "crawl-1")
-    after = sorted(
-        (r["vec_id"], r["crawl_id"], tuple(r["sketch"]))
-        for r in idx2.sketches.collect()
-    )
-    assert before == after and idx2.n_vectors == 310
-
-
-def test_load_index_pre_append_layout_fallback(spark, tmp_path):
-    """An index persisted by the pre-append layout (n_vectors in meta,
-    no counts/ table) must still load and serve queries; appending to it
-    must refuse loudly (round-5 ADVICE: the format change silently
-    broke old indexes)."""
-    import numpy as np
-    import pytest as _pytest
-
-    from audio_quality_checker_spark.operators.similarity_index import (
-        append_to_index,
-        build_index,
-        load_index,
-    )
-
-    rng = np.random.default_rng(3)
-    corpus = spark.createDataFrame(
-        [(i, rng.standard_normal(8).tolist()) for i in range(32)],
-        "vec_id long, embedding array<double>",
-    )
-    path = str(tmp_path / "idx")
-    idx = build_index(corpus, path, dim=8, n_bits=64, n_lists=4)
-    # rewrite as the OLD layout: move n_vectors into meta, drop counts/
-    import shutil
-
-    meta = spark.read.parquet(f"{path}/meta").first().asDict()
-    spark.createDataFrame(
-        [(meta["dim"], meta["n_bits"], meta["n_lists"], meta["seed"],
-          idx.n_vectors)],
-        "dim int, n_bits int, n_lists int, seed long, n_vectors long",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    shutil.rmtree(f"{path}/counts")
-
-    old = load_index(spark, path)
-    assert old.n_vectors == 32
-    with _pytest.raises(ValueError, match="pre-append layout"):
-        append_to_index(corpus, old, "c1")
