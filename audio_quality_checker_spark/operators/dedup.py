@@ -21,6 +21,8 @@ O(n * bands) + O(candidate pairs).
 
 from __future__ import annotations
 
+import logging
+from collections import Counter
 from typing import NamedTuple
 
 import numpy as np
@@ -248,24 +250,19 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
 def _banded_sigs(sigs: DataFrame, id_col: str, bands: int, n_hashes: int,
                  extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """(id, *extra, band_idx, band_hash): one row per (doc, band).  Band
-    hash = xxhash64 over the band's r signature components passed as
-    separate long columns plus the band index (no per-band
-    slice+cast-to-string array churn — xxhash64 is variadic)."""
+    hash = xxhash64 over the band index (int) and the band's r signature
+    components as separate long columns (xxhash64 is variadic).  One
+    higher-order expression over sequence(0, bands-1): the plan is built
+    in a few py4j calls, where one column per band took ~300."""
     r = n_hashes // bands
+    sig = F.col("sig")
     return sigs.select(
         id_col,
         *extra_cols,
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(i),
-                        *[F.col("sig")[i * r + j] for j in range(r)],
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_hash"),
+        F.posexplode(F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda i: F.xxhash64(i, *[sig[i * r + j] for j in range(r)]),
+        )).alias("band_idx", "band_hash"),
     )
 
 
@@ -868,8 +865,8 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     still share a block.  The pair universe is exactly {same lang,
     |bucket delta| <= 1}; probed x probed row pairs are excluded (each
     pair is compared once, in its bucket max(blk_a, blk_b)), and block
-    populations come from a broadcast (lang, bucket) counts dimension
-    rather than a count window over the exploded payload rows.
+    populations are counted once, on the driver, and joined back as a
+    literal (lang, bucket) table rather than re-aggregated per action.
 
     Route 1 (exact): per (lang, bucket), blocks up to ``block_cap`` rows
     run the exact all-pairs compare (n^2 bounded by cap^2 per block).
@@ -926,7 +923,7 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
                  lambda t: t != "")
     )
     # ONE narrow tokenized projection, persisted and reused by the
-    # counts dimension, the exact route (both join sides) and the hot
+    # block counts, the exact route (both join sides) and the hot
     # route's class collapse: tokenization is the dominant per-row
     # cost and the round-4 shape recomputed it on every consumer.  At
     # corpus scale this spills to disk (MEMORY_AND_DISK) — still far
@@ -943,54 +940,48 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
         toks.alias("toks"),
     )
     base.persist(StorageLevel.MEMORY_AND_DISK)
-    # eager: the blk_pop broadcast builds run as concurrent futures and
-    # otherwise race the cold cache, each re-scanning and re-tokenizing
-    # the source (three duplicate scan stages measured at sf1)
-    base.count()
-    # Block-population COUNTS are a tiny (lang, bucket) dimension —
-    # aggregate them first and BROADCAST them back, instead of running a
-    # count window over the exploded payload-carrying frame (the round-4
-    # shape shuffled every (doc, toks, text) row twice just to learn its
-    # bucket size; at sf1 that window + persist was ~40% of the
-    # operator).  Probed population of bucket b = home docs of b plus
-    # docs probing up from b-1.
-    floor_counts = base.groupBy("lang", "len_blk").agg(
-        F.count(F.lit(1)).alias("c")
+    # Block populations, worked out ONCE: this one aggregate both
+    # materializes `base` (every later plan reads the cache) and brings
+    # the (lang, bucket) home counts to the driver.  The table is
+    # O(langs x length buckets), the rows any broadcast (lang, bucket)
+    # counts dimension pulls to the driver once per broadcast, so it is
+    # collected whole, without a driver-budget check.
+    # Probed population of bucket b = home docs of b plus docs probing
+    # up from b-1.  A null lang or text gives a null key: no block.
+    home = {
+        (r["lang"], r["len_blk"]): r["count"]
+        for r in base.groupBy("lang", "len_blk").count().collect()
+        if r["lang"] is not None and r["len_blk"] is not None
+    }
+    pop: Counter = Counter()
+    for (lang, blk), c in home.items():
+        pop[lang, blk] += c
+        pop[lang, blk + 1] += c
+    # each home bucket's (own, next) probed populations
+    probes = {(lang, blk): (pop[lang, blk], pop[lang, blk + 1])
+              for lang, blk in home}
+    n_exact = sum(n <= block_cap for n in pop.values())
+    logging.getLogger(fits_driver_budget.__module__).info(
+        "dedup.blocks: %d exact buckets (%d docs), %d hot buckets (%d docs)"
+        " at block cap %d", n_exact,
+        sum(c for k, c in home.items() if min(probes[k]) <= block_cap),
+        len(pop) - n_exact,
+        sum(c for k, c in home.items() if max(probes[k]) > block_cap),
+        block_cap)
+    # The plans read them as a literal VALUES relation: a LocalTableScan,
+    # whose broadcast runs no Python worker, shuffle or second pass over
+    # `base`, and which Catalyst filters per route at plan time.  Langs
+    # travel as UTF-8 hex so no quote or backslash can break the SQL
+    # text; the all-null first row types the columns and joins nothing.
+    rows = ["(CAST(NULL AS STRING), CAST(NULL AS BIGINT), 0L, 0L)"] + [
+        f"(CAST(X'{lang.encode().hex()}' AS STRING), {blk}L, {h}L, {u}L)"
+        for (lang, blk), (h, u) in probes.items()
+    ]
+    blocks = df.sparkSession.sql(
+        f"SELECT * FROM VALUES {', '.join(rows)}"
+        " AS t(lang, len_blk, blk_n_home, blk_n_up)"
     )
-    blk_pop = (
-        floor_counts.select("lang", F.col("len_blk").alias("blk"), "c")
-        .unionByName(
-            floor_counts.select(
-                "lang", (F.col("len_blk") + 1).alias("blk"), "c"
-            )
-        )
-        .groupBy("lang", "blk")
-        .agg(F.sum("c").alias("blk_n"))
-    )
-    base2 = (
-        base.join(
-            F.broadcast(
-                blk_pop.select(
-                    "lang",
-                    F.col("blk").alias("len_blk"),
-                    F.col("blk_n").alias("blk_n_home"),
-                )
-            ),
-            ["lang", "len_blk"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                blk_pop.select(
-                    "lang",
-                    (F.col("blk") - 1).alias("len_blk"),
-                    F.col("blk_n").alias("blk_n_up"),
-                )
-            ),
-            ["lang", "len_blk"],
-            "left",
-        )
-    )
+    base2 = base.join(F.broadcast(blocks), ["lang", "len_blk"])
 
     inter = F.size(F.array_intersect("a.toks", "b.toks"))
     union = F.size("a.toks") + F.size("b.toks") - inter

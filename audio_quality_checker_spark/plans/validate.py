@@ -288,8 +288,9 @@ def validate(
     return res
 
 
-def print_report(result: ValidationResult) -> str:
-    """Driver-side summary (console-sink analog, main.rs:247-327)."""
+def print_report(result: ValidationResult) -> list:
+    """Driver-side summary (console-sink analog, main.rs:247-327); returns
+    the collected verdict rows."""
     rows = result.verdicts.orderBy("partition_key").collect()
     lines = []
     for r in rows:
@@ -299,6 +300,5 @@ def print_report(result: ValidationResult) -> str:
             f"rows={r['n_rows']} violations={r['n_violations']} "
             f"types={','.join(r['violation_types'])}"
         )
-    report = "\n".join(lines)
-    print(report)
-    return report
+    print("\n".join(lines))
+    return rows

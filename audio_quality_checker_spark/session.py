@@ -11,6 +11,7 @@ from __future__ import annotations
 import logging
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # One Arrow batch is the unit of work inside every pandas UDF.  10k rows
@@ -116,13 +117,6 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_BATCH_ROWS),
         )
-        # local mode = driver-only: the driver heap IS the cluster memory.
-        # Sized from the host (see default_driver_memory) so the features
-        # cache for bench-tier corpora (columnar, compressed) plus shuffle
-        # buffers fit without GC thrash, and the JVM stays inside physical
-        # memory.  Applies only when this call starts the JVM: under
-        # spark-submit, --driver-memory decides the heap.
-        .config("spark.driver.memory", default_driver_memory())
         # ParallelGC over G1: scans of multi-KB binary columns decompress
         # through JNI critical regions on every task thread; G1's GCLocker
         # stalls under that at high core counts ("Retried waiting for
@@ -135,6 +129,16 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if SparkContext._gateway is None and \
+            "PYSPARK_GATEWAY_PORT" not in os.environ:
+        # local mode = driver-only: the driver heap IS the cluster memory.
+        # Sized from the host (see default_driver_memory) so the features
+        # cache for bench-tier corpora (columnar, compressed) plus shuffle
+        # buffers fit without GC thrash, and the JVM stays inside physical
+        # memory.  Only a JVM this call starts can take it: under
+        # spark-submit the conf would report a heap the driver lacks.
+        builder = builder.config("spark.driver.memory",
+                                 default_driver_memory())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

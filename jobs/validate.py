@@ -11,6 +11,7 @@ args -> CheckSuite -> lazy DataFrame DAG -> one action -> report + sinks.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys as _sys
 
@@ -94,13 +95,14 @@ def main(argv=None) -> int:
             verdicts_to_json,
         )
 
-        for r in verdicts_to_json(
-            res.verdicts.orderBy("partition_key")
-        ).collect():
+        rows = verdicts_to_json(res.verdicts.orderBy("partition_key")).collect()
+        for r in rows:
             print(r["json"])
+        rows = [json.loads(r["json"]) for r in rows]
     else:
-        print_report(res)
-    n = res.verdicts.agg({"n_rows": "sum"}).collect()[0][0] or 0
+        rows = print_report(res)
+    # counted from the verdict rows already collected: no second verdict job
+    n = sum(r["n_rows"] for r in rows)
     dt = time.time() - t0
     print(f"-- validated {n} docs in {dt:.2f}s ({n / max(dt, 1e-9):.0f} docs/sec)",
           file=sys.stderr)

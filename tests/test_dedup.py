@@ -740,3 +740,141 @@ def test_sorted_pair_inter_matches_bruteforce():
         ).reshape(npairs)
         assert got.shape == want.shape
         assert (got == want).all()
+
+
+# The route-boundary fixture, for block_cap=_CAP.  Two length-bucket-1
+# blocks (15 tokens of 6 chars = 104 chars), each with one planted pair
+# (one token swapped: token-set jaccard 14/16):
+# - lang _ODD_LANG (a quote, a backslash and non-ASCII): 6 docs, so
+#   buckets 1 and 2 both probe exactly _CAP docs and stay exact;
+# - lang en: 7 docs (_CAP + 1), so both buckets go hot.
+# Each block holds one whitespace-only doc (it counts toward the
+# population but has no tokens).  Null-lang copies of an en doc and
+# null texts have no block: neither route may pair them.
+_CAP = 6
+_ODD_LANG = "q'\\ü語"
+
+
+def _block_tokens(tag: str, i: int, swap: bool = False) -> str:
+    toks = [f"{tag}{i:02d}t{j:02d}" for j in range(15)]
+    if swap:
+        toks[-1] = f"{tag}{i:02d}s99"
+    return " ".join(toks)
+
+
+def _mixed_route_docs(spark):
+    rows = [(1 + i, _ODD_LANG, _block_tokens("w", i)) for i in range(4)]
+    rows += [(5, _ODD_LANG, _block_tokens("w", 0, swap=True)),
+             (6, _ODD_LANG, " " * 150)]
+    rows += [(11 + i, "en", _block_tokens("e", i)) for i in range(5)]
+    rows += [(16, "en", _block_tokens("e", 0, swap=True)),
+             (17, "en", " " * 130),
+             (21, None, _block_tokens("e", 0)),
+             (22, None, _block_tokens("e", 0)),
+             (23, "en", None),
+             (24, "en", None)]
+    return rows, spark.createDataFrame(
+        rows, "doc_id long, lang string, text string")
+
+
+def _brute_force_pairs(rows, threshold):
+    """The guarded surface's pair universe, pairwise: same non-null lang,
+    non-null texts, length buckets at most one apart, token-set jaccard
+    >= threshold over a non-empty union."""
+    import itertools
+
+    out = {}
+    for (ia, la, ta), (ib, lb, tb) in itertools.combinations(sorted(rows), 2):
+        if la is None or la != lb or ta is None or tb is None:
+            continue
+        if abs(len(ta) // 100 - len(tb) // 100) > 1:
+            continue
+        sa, sb = set(ta.split()), set(tb.split())
+        if sa | sb and len(sa & sb) / len(sa | sb) >= threshold:
+            out[ia, ib] = len(sa & sb) / len(sa | sb)
+    return out
+
+
+def test_route_boundary_block_table(spark, caplog):
+    """The driver-side block table: a bucket probing exactly block_cap
+    docs stays on the exact route, one at block_cap + 1 goes hot, docs
+    with no block are in neither, and a lang holding a quote, a
+    backslash and non-ASCII still finds its block.  Pairs and members
+    equal a brute-force reference."""
+    import logging
+
+    from audio_quality_checker_spark import session
+    from audio_quality_checker_spark.operators import dedup
+
+    rows, df = _mixed_route_docs(spark)
+    want = _brute_force_pairs(rows, 0.5)
+    assert want == {(1, 5): 14 / 16, (11, 16): 14 / 16}
+
+    with caplog.at_level(logging.INFO, logger=session.__name__):
+        routes = dedup._guarded_routes(df, "doc_id", "text", "lang", 0.5,
+                                       _CAP, hot_route="star")
+    assert ("dedup.blocks: 2 exact buckets (6 docs), 2 hot buckets "
+            f"(7 docs) at block cap {_CAP}") in caplog.text
+    exact = {(r["id_a"], r["id_b"]) for r in routes.exact_pairs.collect()}
+    hot = {(r["id_a"], r["id_b"]) for r in routes.hot_pairs.collect()}
+    for c in routes.caches:
+        c.unpersist()
+    assert exact == {(1, 5)}, "the bucket at block_cap must stay exact"
+    assert hot == {(11, 16)}, "the bucket at block_cap + 1 must go hot"
+
+    pairs = dedup.jaccard_pairs_guarded(df, threshold=0.5, block_cap=_CAP)
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
+    assert got.keys() == want.keys()
+    assert all(got[p] == pytest.approx(want[p]) for p in want)
+    members = dedup.near_dup_members_guarded(df, threshold=0.5,
+                                             block_cap=_CAP)
+    assert {r["doc_id"] for r in members.collect()} == {1, 5, 11, 16}
+    pairs.unpersist()
+    members.unpersist()
+
+
+def test_band_keys_match_per_band_xxhash(spark):
+    """_banded_sigs' one-expression band keys equal the per-band
+    xxhash64(i, sig[4i..4i+3]) columns for all 32 bands: crawl_state's
+    persisted ingest state stores these hashes."""
+    import random
+
+    from audio_quality_checker_spark.operators.dedup import _banded_sigs
+
+    rng = random.Random(3)
+    sigs = spark.createDataFrame(
+        [(i, [rng.randrange(-2 ** 63, 2 ** 63) for _ in range(128)])
+         for i in range(4)],
+        "doc_id long, sig array<bigint>",
+    )
+    want = sigs.select("doc_id", F.posexplode(F.array(*[
+        F.xxhash64(F.lit(i), *[F.col("sig")[4 * i + j] for j in range(4)])
+        for i in range(32)
+    ])).alias("band_idx", "band_hash"))
+    got = _banded_sigs(sigs, "doc_id", 32, 128)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == 4 * 32
+
+
+def test_members_job_count_guard(spark):
+    """near_dup_members_guarded's Spark jobs on the mixed-route fixture
+    (4 task slots): 23 with the block populations aggregated once per
+    call, 53 when every later action re-derived them.  The bound sits
+    between the two."""
+    from audio_quality_checker_spark.operators.dedup import (
+        near_dup_members_guarded,
+    )
+
+    _, df = _mixed_route_docs(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("members_job_count", "job-count guard")
+    try:
+        members = near_dup_members_guarded(df, threshold=0.5,
+                                           block_cap=_CAP)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("members_job_count"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    members.unpersist()
+    assert n_jobs <= 30, n_jobs

@@ -139,10 +139,15 @@ def test_lsh_candidate_join_is_bucket_keyed(spark):
 
 
 def test_guarded_routes_filter_above_block_count(spark):
-    """Both guarded routes must carry their blk_n filter (<= cap exact
-    route, > cap LSH route) INSIDE the plan — the structural guarantee
-    that no unguarded block self-join shape exists at any input."""
+    """Both guarded routes must carry their block-size filter (<= cap
+    exact route, > cap LSH route) INSIDE the plan — the structural
+    guarantee that no unguarded block self-join shape exists at any
+    input.  The populations reach the plan as a literal (lang, bucket)
+    table, so Catalyst applies each route's filter to that table at
+    plan time: a route whose filter keeps no bucket plans as an empty
+    relation, with no join at all."""
     from audio_quality_checker_spark.operators.dedup import (
+        _guarded_routes,
         jaccard_pairs_guarded,
     )
 
@@ -155,13 +160,22 @@ def test_guarded_routes_filter_above_block_count(spark):
             }
         )
     )
+    # one 6-doc block: over a cap of 3 only the hot route's class table
+    # may read a block, within a cap of 6 only the exact route may
+    for cap, empty, joined in ((3, "exact_pairs", "classes"),
+                               (6, "classes", "exact_pairs")):
+        routes = _guarded_routes(df, "doc_id", "text", "lang", 0.5, cap)
+        off, on = fmt(getattr(routes, empty)), fmt(getattr(routes, joined))
+        for c in (*routes.caches, routes.classes, routes.vcls):
+            c.unpersist()
+        assert "Join" not in off and "<empty>" in off, (cap, off)
+        assert "Join" in on, (cap, on)
     out = jaccard_pairs_guarded(df, threshold=0.5, block_cap=3)
     plan = fmt(out)
-    assert "blk_n" in plan, plan
-    # block populations arrive via a BROADCAST counts dimension, not a
-    # count window over the exploded payload rows (the round-4 shape
-    # shuffled every (doc, toks) row twice just to learn its bucket
-    # size)
+    # block populations arrive as a BROADCAST literal (lang, bucket)
+    # table counted once on the driver, not a count window over the
+    # exploded payload rows (the round-4 shape shuffled every
+    # (doc, toks) row twice just to learn its bucket size)
     assert "BroadcastHashJoin" in plan, plan
     assert "Window" not in plan, plan
     out.unpersist()

@@ -1,6 +1,7 @@
-"""The driver-heap default of ``session.get_spark`` and the driver byte
-budget derived from the heap the JVM was launched with, checked without a
-JVM except in ``test_budget_reads_the_launch_heap``."""
+"""The driver-heap default of ``session.get_spark`` (and when it is set),
+and the driver byte budget derived from the heap the JVM was launched
+with, checked without a JVM except in
+``test_budget_reads_the_launch_heap``."""
 
 import logging
 from types import SimpleNamespace
@@ -97,3 +98,47 @@ def test_fits_driver_budget_at_the_bound(caplog):
         assert not session.fits_driver_budget(spark, "site.b", 1001)
     [rec] = caplog.records
     assert "site.b: 1001 bytes over driver budget 1000 bytes" in rec.message
+
+
+class _Builder:
+    """Records the conf ``get_spark`` builds; starts nothing."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def master(self, _):
+        return self
+
+    def appName(self, _):
+        return self
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def getOrCreate(self):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+
+@pytest.mark.parametrize("gateway,port,sets_heap", [
+    (None, None, True),        # this call launches the JVM
+    (None, "40001", False),    # spark-submit: the JVM launched Python
+    (object(), None, False),   # a session is already up in-process
+], ids=["launch", "spark-submit", "running"])
+def test_heap_set_only_when_launching_the_jvm(monkeypatch, gateway, port,
+                                              sets_heap):
+    builder = _Builder()
+    monkeypatch.setattr(session, "SparkSession",
+                        SimpleNamespace(builder=builder))
+    monkeypatch.setattr(session, "SparkContext",
+                        SimpleNamespace(_gateway=gateway))
+    if port is None:
+        monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    else:
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", port)
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    session.get_spark(cores=2)
+    assert builder.conf.get("spark.driver.memory") == \
+        ("3g" if sets_heap else None)
+    assert builder.conf["spark.sql.shuffle.partitions"] == "8"
