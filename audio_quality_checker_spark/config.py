@@ -52,11 +52,6 @@ class CheckSuite:
     max_extraction_mismatch_rate: float = 0.01
     max_extraction_error_rate: float = 0.02
     max_schema_violation_rate: float = 0.01  # declared-domain nonconformance
-    # finalize the drift comparison driver-side on the collected
-    # (partitions x bins) histograms — KB-sized for daily/weekly runs and
-    # removes ~8 sub-second Spark stages of fixed latency; set False for
-    # million-partition backfills where the histogram itself is big
-    drift_driver_finalize: bool = True
     trend_window: int = 7                # trailing days in the trend slope
     max_trend_shift: float = 0.5         # stddev-normalized drift across window
     max_doc_dup_line_frac: float = 0.30  # a doc above this is "repetitive"

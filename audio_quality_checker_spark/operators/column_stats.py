@@ -95,7 +95,7 @@ def stats_violations(stats: DataFrame, suite: CheckSuite) -> DataFrame:
         )
     )
 
-    # uniqueness (HLL++ or exact distinct, already in the stats row)
+    # uniqueness (HLL sketch or exact distinct, already in the stats row)
     dup_rate = F.lit(1.0) - F.col("n_urls_distinct") / n
     structs.append(
         _v(

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from audio_quality_checker_spark.functions.hashing import splitmix64
+from audio_quality_checker_spark.operators.stats import sketch_count_distinct
 from audio_quality_checker_spark.session import fits_driver_budget
 
 _SEED_BASE = np.uint64(0x9E3779B97F4A7C15)
@@ -316,9 +317,12 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
 # costs more (extra groupBy + persist + expand joins) than it saves —
 # measured at sf0.1: unconditional collapse regressed minhash_near_dups
 # 2.42s -> 3.28s on the low-dup documents corpus, while dup-heavy
-# fixtures keep a ~2x win.  The probe is free: approx_count_distinct
+# fixtures keep a ~2x win.  The probe is free: the distinct-count sketch
 # rides the same agg action that eagerly materializes the persist.
 _COLLAPSE_MIN_DUP_FRAC = 0.05
+# lgK 12 (~1.6% relative error): the gate threshold is itself 5%, so a
+# coarser sketch would let the estimate straddle it
+_DUP_SKETCH_LGK = 12
 
 
 def _materialize_and_probe_dups(sigs: DataFrame, sig_expr) -> float:
@@ -326,13 +330,10 @@ def _materialize_and_probe_dups(sigs: DataFrame, sig_expr) -> float:
     plan references it from four subplans — a cold cache races and
     re-runs the signature kernel up to 4x, the round-1 pathology) and
     return the estimated duplicate-signature fraction from the SAME
-    action (count + approx_count_distinct in one agg: no extra job)."""
-    # rsd=0.02: the default 5% relative error is the same size as the
-    # gate threshold itself; 2% keeps the decision stable (HLL register
-    # cost is still KBs)
+    action (count + distinct-count sketch in one agg: no extra job)."""
     row = sigs.agg(
         F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(sig_expr, 0.02).alias("d"),
+        sketch_count_distinct(sig_expr, _DUP_SKETCH_LGK).alias("d"),
     ).first()
     n, d = row["n"], row["d"]
     if not n:
@@ -759,8 +760,8 @@ def simhash_pairs_multitable(sigs: DataFrame, id_col: str = "doc_id",
 
 class _GuardedRoutes(NamedTuple):
     """The two verified routes of the guarded surface, still lazy, plus
-    the caches the builder persisted (callers hand them to
-    _finish_pairs after deriving their output).
+    every frame the builder persisted (``caches``: callers hand them to
+    _finish_pairs after deriving their output, on both routes).
 
     For hot_route="pairs" the builder also exposes the class-collapsed
     intermediates (``classes``: one row per distinct (lang, bucket,
@@ -1148,7 +1149,8 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
             )
         )
         hot_pairs = cross.unionByName(within)
-        return _GuardedRoutes(exact_pairs, hot_pairs, (cls_sigs, base),
+        return _GuardedRoutes(exact_pairs, hot_pairs,
+                              (cls_sigs, classes, vcls, base),
                               classes=classes, vcls=vcls)
     if hot_route != "star":  # pragma: no cover - caller bug
         raise ValueError(f"unknown hot_route {hot_route!r}")
@@ -1275,7 +1277,7 @@ def jaccard_pairs_guarded(df: DataFrame, id_col: str = "doc_id",
         .select("id_a", "id_b", "jaccard")
     )
     out = routes.hot_pairs.unionByName(exact_only)
-    return _finish_pairs(out, *routes.caches, classes, vcls)
+    return _finish_pairs(out, *routes.caches)
 
 
 def jaccard_edges_guarded(df: DataFrame, id_col: str = "doc_id",

@@ -128,6 +128,12 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no call-site capture: with it on, every DataFrame/Column call
+        # walks the Python stack and adds py4j round trips to read the
+        # conf and set and clear the origin (a warm validate pass over
+        # the 6,000-doc fixture made ~12,800 py4j calls with it and
+        # ~6,100 without).  Errors still carry their error class.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if SparkContext._gateway is None and \
             "PYSPARK_GATEWAY_PORT" not in os.environ:

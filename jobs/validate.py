@@ -50,7 +50,11 @@ def main(argv=None) -> int:
     import dataclasses
 
     from audio_quality_checker_spark.config import FULL, QUICK, CheckSuite
-    from audio_quality_checker_spark.plans.validate import print_report, validate
+    from audio_quality_checker_spark.plans.validate import (
+        partition_order,
+        print_report,
+        validate,
+    )
     from audio_quality_checker_spark.session import get_spark
 
     suite = QUICK if args.quick else (FULL if args.full else CheckSuite())
@@ -95,10 +99,14 @@ def main(argv=None) -> int:
             verdicts_to_json,
         )
 
-        rows = verdicts_to_json(res.verdicts.orderBy("partition_key")).collect()
-        for r in rows:
-            print(r["json"])
-        rows = [json.loads(r["json"]) for r in rows]
+        lines = sorted(
+            (r["json"] for r in verdicts_to_json(res.verdicts).collect()),
+            key=lambda line: partition_order(
+                json.loads(line).get("partition_key")),
+        )
+        for line in lines:
+            print(line)
+        rows = [json.loads(line) for line in lines]
     else:
         rows = print_report(res)
     # counted from the verdict rows already collected: no second verdict job

@@ -833,6 +833,33 @@ def test_route_boundary_block_table(spark, caplog):
     members.unpersist()
 
 
+def test_pairs_route_leaves_no_persisted_rdd(spark):
+    """Every frame _guarded_routes persists is in its ``caches`` on both
+    hot routes (the pairs route's class table and verified class pairs
+    included), so jaccard_pairs_guarded leaves no persisted RDD behind
+    once its caller unpersists the output."""
+    from audio_quality_checker_spark.operators import dedup
+
+    _, df = _mixed_route_docs(spark)
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    for hot_route in ("pairs", "star"):
+        routes = dedup._guarded_routes(df, "doc_id", "text", "lang", 0.5,
+                                       _CAP, hot_route=hot_route)
+        assert routes.hot_pairs.count() == 1
+        for c in routes.caches:
+            c.unpersist()
+        assert persisted() <= before, hot_route
+    pairs = dedup.jaccard_pairs_guarded(df, threshold=0.5, block_cap=_CAP)
+    assert pairs.count() == 2
+    pairs.unpersist()
+    assert persisted() <= before
+
+
 def test_band_keys_match_per_band_xxhash(spark):
     """_banded_sigs' one-expression band keys equal the per-band
     xxhash64(i, sig[4i..4i+3]) columns for all 32 bands: crawl_state's

@@ -89,3 +89,51 @@ def test_min_confidence_filter(spark, golden):
     confs = [r["confidence"] for r in res.violations.collect()]
     res.unpersist()
     assert confs and all(c >= 0.9 for c in confs)
+
+
+def test_validate_job_count_guard(spark, tmp_path, monkeypatch):
+    """jobs/validate.py main on the 15-category fixture warehouse (4 task
+    slots): 24 Spark jobs with the verdicts cached alongside the other
+    results and both drift histograms brought in by one collect; 27 when
+    the report re-ran the verdict plan (4 jobs).  The report reads the
+    cache (InMemoryTableScan) in one job."""
+    from jobs.validate import main
+
+    from audio_quality_checker_spark.plans import validate as plan
+    from audio_quality_checker_spark.sources.pages import (
+        write_fixture_warehouse,
+    )
+
+    root = str(tmp_path)
+    write_fixture_warehouse(spark, root)
+    sc = spark.sparkContext
+    report = {}
+
+    def jobs() -> int:
+        return len(sc.statusTracker().getJobIdsForGroup("validate_jobs"))
+
+    def print_report(result):
+        report["result"] = result
+        report["plan"] = result.verdicts._jdf.queryExecution() \
+            .executedPlan().toString()
+        before = jobs()
+        rows = real_print_report(result)
+        report["jobs"] = jobs() - before
+        return rows
+
+    real_print_report = plan.print_report
+    monkeypatch.setattr(plan, "print_report", print_report)
+    sc.setJobGroup("validate_jobs", "job-count guard")
+    try:
+        assert main(["--pages", f"{root}/pages",
+                     "--ref-hosts", f"{root}/ref_hosts",
+                     "--baseline", f"{root}/baseline_snapshot",
+                     "--out", f"{root}/results"]) == 0
+        n_jobs = jobs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    report["result"].unpersist()
+    assert "InMemoryTableScan" in report["plan"], report["plan"]
+    assert report["jobs"] == 1, report["jobs"]
+    assert n_jobs <= 24, n_jobs

@@ -166,7 +166,7 @@ def test_guarded_routes_filter_above_block_count(spark):
                                (6, "classes", "exact_pairs")):
         routes = _guarded_routes(df, "doc_id", "text", "lang", 0.5, cap)
         off, on = fmt(getattr(routes, empty)), fmt(getattr(routes, joined))
-        for c in (*routes.caches, routes.classes, routes.vcls):
+        for c in routes.caches:
             c.unpersist()
         assert "Join" not in off and "<empty>" in off, (cap, off)
         assert "Join" in on, (cap, on)

@@ -1,7 +1,8 @@
 """The driver-heap default of ``session.get_spark`` (and when it is set),
-and the driver byte budget derived from the heap the JVM was launched
-with, checked without a JVM except in
-``test_budget_reads_the_launch_heap``."""
+the driver byte budget derived from the heap the JVM was launched with,
+and the session conf ``get_spark`` sets, checked without a JVM except in
+``test_budget_reads_the_launch_heap`` and
+``test_dataframe_debugging_off_and_errors_keep_their_class``."""
 
 import logging
 from types import SimpleNamespace
@@ -142,3 +143,22 @@ def test_heap_set_only_when_launching_the_jvm(monkeypatch, gateway, port,
     assert builder.conf.get("spark.driver.memory") == \
         ("3g" if sets_heap else None)
     assert builder.conf["spark.sql.shuffle.partitions"] == "8"
+
+
+def test_dataframe_debugging_off_and_errors_keep_their_class(
+        spark, monkeypatch):
+    """``get_spark`` turns off PySpark's per-call call-site capture; an
+    ANSI error still reaches Python as a PySpark error naming its error
+    class."""
+    from pyspark.errors import ArithmeticException
+    from pyspark.errors import utils
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") \
+        == "false"
+    # PySpark caches the answer per process: re-read it from the session
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert not utils.is_debugging_enabled()
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.lit(1) / F.col("id")).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
