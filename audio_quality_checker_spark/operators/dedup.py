@@ -1067,25 +1067,25 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
         )
     )
     classes.persist(StorageLevel.MEMORY_AND_DISK)
-    # eager (several subplans reference it); sizes the verify broadcast:
-    # token strings, 8-byte offset and 8-byte id each, ~32 B per class
-    cls_bytes = classes.agg(F.sum(
-        F.length(F.concat_ws("", "tset")) + 16 * F.size("tset") + 32
-    )).collect()[0][0] or 0
     # `top` (the class's largest doc id) lets the star route drop
     # candidate classes whose expansion could never pass doc > anchor
     sig_cols = ("lang", "len_blk", "tsz", "top")
     cls_sigs = minhash_signatures(
         classes.select("rid", "lang", "len_blk",
                        F.size("tset").alias("tsz"),
-                       F.element_at("ids", -1).alias("top"), "tset"),
-        "rid", tokens_col="tset", extra_cols=sig_cols,
+                       F.element_at("ids", -1).alias("top"), "tset",
+                       # verify broadcast bytes: token strings, 8-byte
+                       # offset and 8-byte id each, ~32 B per class
+                       (F.length(F.concat_ws("", "tset"))
+                        + 16 * F.size("tset") + 32).alias("cls_b")),
+        "rid", tokens_col="tset", extra_cols=(*sig_cols, "cls_b"),
     )
     # compact per-class signatures cached; the 32x banded explode is
     # re-derived lazily per join side (cheap codegen vs caching the
-    # exploded frame)
+    # exploded frame).  One eager action fills both caches (several
+    # subplans read them) and sizes the verify broadcast.
     cls_sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    cls_sigs.count()
+    cls_bytes = cls_sigs.agg(F.sum("cls_b")).collect()[0][0] or 0
     sigs = _banded_sigs(cls_sigs, "rid", 32, 128, extra_cols=sig_cols)
 
     def size_ok(sa: Column, sb: Column) -> Column:

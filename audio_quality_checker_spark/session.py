@@ -29,6 +29,19 @@ DRIVER_MEM_HOST_SHARE = 0.6
 DRIVER_MEM_CAP_MB = 48 * 1024
 DRIVER_MEM_FALLBACK = "48g"
 
+# Whole-stage codegen cache (spark.sql.codegen.cache.maxEntries), in
+# compiled classes.  One cold pass compiles 106 classes on validate and
+# 110 on near_dup, above Spark's default of 100: the LRU then evicts each
+# class shortly before the next pass needs it, and every warm pass
+# recompiled 54-59 classes (0.4-0.55 s of janino time), each a new class
+# whose JIT-compiled code starts over.  1,000 holds several
+# passes' classes.
+CODEGEN_CACHE_ENTRIES = 1000
+
+# Catalyst's auto-broadcast ceiling; get_spark lowers it to the driver
+# budget where that is smaller (the driver builds every broadcast).
+AUTO_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
 
 def _mem_available_kb(meminfo: str = "/proc/meminfo") -> int | None:
     """MemAvailable in kB, or None where the host's memory cannot be read."""
@@ -127,7 +140,11 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.autoBroadcastJoinThreshold",
+                str(AUTO_BROADCAST_MAX_BYTES))
+        # static: read once, when this call creates the SparkContext
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         # no call-site capture: with it on, every DataFrame/Column call
         # walks the Python stack and adds py4j round trips to read the
         # conf and set and clear the origin (a warm validate pass over
@@ -149,4 +166,10 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # only past the budget: setting a conf builds the session state,
+    # which a fresh session otherwise defers to its first query
+    if not fits_driver_budget(spark, "sql.autoBroadcastJoinThreshold",
+                              AUTO_BROADCAST_MAX_BYTES):
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       str(driver_budget_bytes(spark)))
     return spark

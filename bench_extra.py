@@ -10,7 +10,10 @@ Same methodology as bench.py (noop sink, wall-clock per query), plus:
                     via the REST API — the stage-level breakdown the
                     optimization log cites.
 
-Prints one JSON line per query and a final summary line.
+Prints one JSON line per query and a final summary line.  Each query's
+line carries, per sample, the classes whole-stage codegen compiled
+(``compiles``) and the seconds janino spent on them (``compile_s``): a
+warm repeat whose classes are still in the codegen cache compiles none.
 """
 
 from __future__ import annotations
@@ -95,15 +98,22 @@ def main() -> int:
     if args.ui:
         _stages(ui_url, seen_stages)  # swallow warmup stages
 
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
     totals: dict[str, float] = {}
     for name in names:
         fn, _ = REGISTRY[name]
-        samples = []
+        samples, compiles, compile_s = [], [], []
         for i in range(args.repeats):
             spark.sparkContext.setJobDescription(f"{name}#{i}")
+            c0, ns0 = compiled.getCount(), codegen.compileTime()
             t0 = time.time()
             fn(spark, args.sf).write.mode("overwrite").format("noop").save()
             samples.append(round(time.time() - t0, 3))
+            compiles.append(compiled.getCount() - c0)
+            compile_s.append(round((codegen.compileTime() - ns0) / 1e9, 3))
             spark.sparkContext.setJobDescription(None)
             if args.ui:
                 st = _stages(ui_url, seen_stages)
@@ -112,7 +122,8 @@ def main() -> int:
                         print(f"#   {json.dumps(s)}")
         totals[name] = min(samples)
         print(json.dumps({"query": name, "samples": samples,
-                          "min": min(samples)}), flush=True)
+                          "min": min(samples), "compiles": compiles,
+                          "compile_s": compile_s}), flush=True)
 
     print(json.dumps({"metric": "bench_extra_total_min",
                       "value": round(sum(totals.values()), 3),

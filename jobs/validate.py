@@ -109,6 +109,9 @@ def main(argv=None) -> int:
         rows = [json.loads(line) for line in lines]
     else:
         rows = print_report(res)
+    # the rows are on the driver: release the cached results, which a
+    # long-lived session calling main again would otherwise accumulate
+    res.unpersist()
     # counted from the verdict rows already collected: no second verdict job
     n = sum(r["n_rows"] for r in rows)
     dt = time.time() - t0

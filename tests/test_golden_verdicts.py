@@ -91,29 +91,46 @@ def test_min_confidence_filter(spark, golden):
     assert confs and all(c >= 0.9 for c in confs)
 
 
-def test_validate_job_count_guard(spark, tmp_path, monkeypatch):
-    """jobs/validate.py main on the 15-category fixture warehouse (4 task
-    slots): 24 Spark jobs with the verdicts cached alongside the other
-    results and both drift histograms brought in by one collect; 27 when
-    the report re-ran the verdict plan (4 jobs).  The report reads the
-    cache (InMemoryTableScan) in one job."""
-    from jobs.validate import main
-
-    from audio_quality_checker_spark.plans import validate as plan
+@pytest.fixture(scope="module")
+def warehouse(spark, tmp_path_factory):
+    """The 15-category fixture warehouse on disk, for jobs/validate.py."""
     from audio_quality_checker_spark.sources.pages import (
         write_fixture_warehouse,
     )
 
-    root = str(tmp_path)
+    root = str(tmp_path_factory.mktemp("warehouse"))
     write_fixture_warehouse(spark, root)
+    return root
+
+
+def _validate_job(root: str, out: str) -> int:
+    from jobs.validate import main
+
+    return main(["--pages", f"{root}/pages",
+                 "--ref-hosts", f"{root}/ref_hosts",
+                 "--baseline", f"{root}/baseline_snapshot",
+                 "--out", out])
+
+
+def test_validate_job_count_guard(spark, warehouse, tmp_path, monkeypatch):
+    """jobs/validate.py main on the 15-category fixture warehouse (4 task
+    slots): 24 Spark jobs with the verdicts cached alongside the other
+    results and both drift histograms brought in by one collect; 27 when
+    the report re-ran the verdict plan (4 jobs).  The report reads the
+    cache (InMemoryTableScan) in one job, and main releases the cached
+    results before it returns."""
+    from audio_quality_checker_spark.plans import validate as plan
+
     sc = spark.sparkContext
     report = {}
 
     def jobs() -> int:
         return len(sc.statusTracker().getJobIdsForGroup("validate_jobs"))
 
+    def persisted() -> set:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
     def print_report(result):
-        report["result"] = result
         report["plan"] = result.verdicts._jdf.queryExecution() \
             .executedPlan().toString()
         before = jobs()
@@ -123,17 +140,31 @@ def test_validate_job_count_guard(spark, tmp_path, monkeypatch):
 
     real_print_report = plan.print_report
     monkeypatch.setattr(plan, "print_report", print_report)
+    before = persisted()
     sc.setJobGroup("validate_jobs", "job-count guard")
     try:
-        assert main(["--pages", f"{root}/pages",
-                     "--ref-hosts", f"{root}/ref_hosts",
-                     "--baseline", f"{root}/baseline_snapshot",
-                     "--out", f"{root}/results"]) == 0
+        assert _validate_job(warehouse, str(tmp_path)) == 0
         n_jobs = jobs()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    report["result"].unpersist()
     assert "InMemoryTableScan" in report["plan"], report["plan"]
     assert report["jobs"] == 1, report["jobs"]
     assert n_jobs <= 24, n_jobs
+    assert persisted() <= before, persisted() - before
+
+
+def test_warm_validate_job_compiles_nothing(spark, warehouse, tmp_path):
+    """A second jobs/validate.py main in the same session finds its
+    generated classes in the whole-stage codegen cache.  A cold call
+    compiles about 106 classes, more than Spark's default cache of 100
+    entries holds; at that default the LRU evicted classes before the
+    next call needed them, and the second call here recompiled 25."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    counts = []
+    for i in range(2):
+        before = compiles.getCount()
+        assert _validate_job(warehouse, f"{tmp_path}/r{i}") == 0
+        counts.append(compiles.getCount() - before)
+    assert counts[1] <= 2, counts

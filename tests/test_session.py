@@ -1,7 +1,8 @@
 """The driver-heap default of ``session.get_spark`` (and when it is set),
 the driver byte budget derived from the heap the JVM was launched with,
 and the session conf ``get_spark`` sets, checked without a JVM except in
-``test_budget_reads_the_launch_heap`` and
+``test_budget_reads_the_launch_heap``,
+``test_auto_broadcast_threshold_from_the_budget`` and
 ``test_dataframe_debugging_off_and_errors_keep_their_class``."""
 
 import logging
@@ -118,8 +119,10 @@ class _Builder:
         return self
 
     def getOrCreate(self):
-        return SimpleNamespace(
-            sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+        spark = _fake_spark(6 << 30, 4)
+        spark.sparkContext.setLogLevel = lambda level: None
+        spark.conf = SimpleNamespace(set=lambda k, v: None)
+        return spark
 
 
 @pytest.mark.parametrize("gateway,port,sets_heap", [
@@ -143,6 +146,33 @@ def test_heap_set_only_when_launching_the_jvm(monkeypatch, gateway, port,
     assert builder.conf.get("spark.driver.memory") == \
         ("3g" if sets_heap else None)
     assert builder.conf["spark.sql.shuffle.partitions"] == "8"
+
+
+@pytest.mark.parametrize("budget,threshold", [
+    (1 << 20, 1 << 20),  # a heap too small for Spark's 64 MiB default
+    (None, 64 << 20),    # the session's own budget
+], ids=["tiny-budget", "real-budget"])
+def test_auto_broadcast_threshold_from_the_budget(spark, monkeypatch, caplog,
+                                                  budget, threshold):
+    """``get_spark`` caps Catalyst's auto-broadcast threshold at the
+    driver budget and logs the decision."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    if budget is not None:
+        monkeypatch.setattr(session, "driver_budget_bytes",
+                            lambda s: budget)
+    try:
+        with caplog.at_level(logging.INFO, logger=session.__name__):
+            again = session.get_spark(
+                app_name=spark.sparkContext.appName,
+                cores=spark.sparkContext.defaultParallelism,
+                shuffle_partitions=int(
+                    spark.conf.get("spark.sql.shuffle.partitions")))
+        assert again is spark
+        assert spark.conf.get(key) == str(threshold)
+        assert f"sql.autoBroadcastJoinThreshold: {64 << 20} bytes " \
+            f"{'over' if budget else 'within'} driver budget" in caplog.text
+    finally:
+        spark.conf.set(key, str(session.AUTO_BROADCAST_MAX_BYTES))
 
 
 def test_dataframe_debugging_off_and_errors_keep_their_class(
